@@ -121,9 +121,6 @@ class GraftSettings(env: Map[String, String] = sys.env) {
 
   /** Delta-log length that triggers snapshot compaction. */
   def snapshotMaxDeltas: Int = int("GRAFT_SNAPSHOT_MAX_DELTAS", 8)
-
-  /** Streaming trigger interval, ms (maps to Trigger.ProcessingTime). */
-  def triggerIntervalMs: Long = long("GRAFT_TRIGGER_INTERVAL_MS", 0L)
 }
 
 object GraftSettings {

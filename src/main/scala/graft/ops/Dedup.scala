@@ -638,10 +638,9 @@ object Dedup {
     * resets the estimate each round.
     *
     * Small-graph fast path: when the deduplicated edge set fits under
-    * `maxDriverEdges` (a BOUNDED collect — the same capped-driver
-    * discipline as StreamingRunner's maxScopedEvents), the components
-    * solve in one union-find pass on the driver instead of paying
-    * several distributed rounds of fixed scheduling cost. Near-dup
+    * `maxDriverEdges` (a BOUNDED collect), the components solve in one
+    * union-find pass on the driver instead of paying several
+    * distributed rounds of fixed scheduling cost. Near-dup
     * verification typically leaves edge sets orders of magnitude
     * smaller than the corpus, so this is the common case even at
     * 100 TB input; edge sets above the cap run the contraction loop.

@@ -15,9 +15,8 @@ trait ChangeFeed {
   def drain(): Seq[ChangeEvent]
 
   /** Compensation for a failed tick: put a drained batch back so the
-    * next iterate() retries it (the destructive drain would otherwise
-    * lose the batch when a refresh throws — the streaming runner gets
-    * this for free from checkpoint replay). */
+    * next iterate() retries it (a destructive drain would otherwise
+    * lose the batch when a refresh throws). */
   def requeue(events: Seq[ChangeEvent]): Unit
 }
 

@@ -8,34 +8,20 @@ import graft.cdc.{ChangeEvent, SlotConnection, WalDecoder}
   * decoded by [[WalDecoder]]; BEGIN/COMMIT and `(no-tuple-data)` lines
   * drop out exactly as the reference's SLOT_RE filter does.
   *
-  * Two delivery modes:
-  *
-  *   - '''Deferred-commit (default, at-least-once).''' [[drain]] PEEKs
-  *     the slot (non-destructive) and remembers the batch's last LSN;
-  *     the ADVANCE (offset commit) happens at the START of the NEXT
-  *     drain — by which point the runner has finished the previous tick
-  *     without calling [[requeue]]. A crash or failed tick leaves the
-  *     confirmed LSN untouched, so the batch replays; idempotent
-  *     refresh makes the replay converge (§2C). The LSN here plays the
-  *     role the Spark checkpoint plays for [[StreamingRunner]].
-  *
-  *   - '''Destructive (reference parity).''' [[drain]] uses
-  *     `pg_logical_slot_get_changes`, which truncates the slot on read
-  *     (the reference's "gather ... which has the side effect of
-  *     truncating the replication slot"). A failed tick's batch then
-  *     exists only in memory — [[requeue]] buffers it locally, which is
-  *     strictly better than the reference (it loses the batch on
-  *     crash) but still loses it if the process dies mid-tick.
+  * Deferred commit, at-least-once: [[drain]] PEEKs the slot (the read
+  * leaves it intact) and remembers the batch's last LSN; the ADVANCE
+  * (offset commit) happens at the START of the NEXT drain — by which
+  * point the runner has finished the previous tick without calling
+  * [[requeue]]. A crash or failed tick leaves the confirmed LSN
+  * untouched, so the batch replays; idempotent refresh makes the
+  * replay converge (§2C). The reference reads with the truncating
+  * `pg_logical_slot_get_changes`, so a batch read before a crash is
+  * gone.
   */
-class PgSlotFeed(
-    conn: SlotConnection,
-    slot: String,
-    destructive: Boolean = false) extends ChangeFeed {
+class PgSlotFeed(conn: SlotConnection, slot: String) extends ChangeFeed {
 
-  // deferred-commit state: last drained batch's final LSN, not yet advanced
+  // last drained batch's final LSN, not yet advanced
   private var pendingAdvance: Option[String] = None
-  // destructive-mode compensation buffer
-  private val buffered = scala.collection.mutable.ArrayBuffer[ChangeEvent]()
 
   /** Drop + recreate the slot — the reference's startup sequence
     * (runner.py:56-64): after setup's backfill, only post-setup changes
@@ -44,32 +30,21 @@ class PgSlotFeed(
     if (conn.slotExists(slot)) conn.dropSlot(slot)
     conn.createSlot(slot)
     pendingAdvance = None
-    buffered.clear()
   }
-
-  private def decode(lines: Seq[graft.cdc.WalLine]): Seq[ChangeEvent] =
-    lines.flatMap(l => WalDecoder.decode(l.xid, l.lsn, l.data))
 
   override def drain(): Seq[ChangeEvent] = synchronized {
-    if (destructive) {
-      val out = buffered.toSeq ++ decode(conn.getChanges(slot))
-      buffered.clear()
-      out
-    } else {
-      // commit the PREVIOUS batch now — reaching this drain means the
-      // runner completed the last tick without requeueing it
-      pendingAdvance.foreach(conn.advance(slot, _))
-      pendingAdvance = None
-      val lines = conn.peekChanges(slot)
-      pendingAdvance = lines.lastOption.map(_.lsn)
-      decode(lines)
-    }
+    // commit the PREVIOUS batch now — reaching this drain means the
+    // runner completed the last tick without requeueing it
+    pendingAdvance.foreach(conn.advance(slot, _))
+    pendingAdvance = None
+    val lines = conn.peekChanges(slot)
+    pendingAdvance = lines.lastOption.map(_.lsn)
+    lines.flatMap(l => WalDecoder.decode(l.xid, l.lsn, l.data))
   }
 
+  /** Cancel the pending advance: the slot still holds the batch, so the
+    * next peek replays it by itself. */
   override def requeue(events: Seq[ChangeEvent]): Unit = synchronized {
-    if (destructive) buffered ++= events
-    // deferred-commit mode: cancel the pending advance — the slot still
-    // holds the batch, so the next peek replays it by itself
-    else pendingAdvance = None
+    pendingAdvance = None
   }
 }

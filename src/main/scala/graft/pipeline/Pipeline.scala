@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.refresh.{DiffRefresher, SnapshotStore}
+import graft.refresh.{BucketedSnapshotStore, DiffRefresher}
 import graft.sink.DocumentSink
 
 /** One sync'd view: the unit the reference calls a `Sinker`
@@ -20,7 +20,7 @@ class Pipeline(
     val parentTable: String,
     val sourceTables: Set[String],
     compute: () => DataFrame,
-    store: SnapshotStore,
+    store: BucketedSnapshotStore,
     val sink: DocumentSink,
     scopedCompute: Option[Seq[graft.cdc.ChangeEvent] => (DataFrame, DataFrame)] = None,
     canScope: Seq[graft.cdc.ChangeEvent] => Boolean =
@@ -49,33 +49,20 @@ class Pipeline(
     * I/O shape (the 100 TB property): the recomputed view flows
     * through ONE full-outer diff join (never staged into the store);
     * the diff is the only thing written — so an idle refresh writes
-    * NOTHING, and a 1% change batch rewrites ~1% of a
-    * [[graft.refresh.BucketedSnapshotStore]]'s files. The view query
-    * runs exactly once per refresh (single diff branch).
+    * NOTHING, and a 1% change batch appends one change-sized delta to
+    * the bucketed store. The view query runs exactly once per refresh
+    * (single diff branch).
     *
     * Failure ordering: the snapshot merge commits only after the sink
     * accepted the batch, so a sink failure leaves the old snapshot
     * committed and the next refresh re-diffs and re-sends — at-least-
     * once delivery converging via idempotent upserts (SURVEY §2C). */
   def refresh(): Long = {
-    // keyed old side: the diff never reads the old snapshot's doc
-    // bytes, and the fused full-outer diff reads the recomputed view
-    // exactly ONCE — so the view query needs no persist of its own;
-    // the cached ACTIONS frame (change-volume-sized) is what the
-    // count, the sink and the snapshot merge all share.
     // compute() runs first so a failing view query surfaces ITS error,
     // not the store's (e.g. "no committed snapshot" on a never-backfilled
     // pipeline) — the reference's error-ordering the runner tests pin
     val newSnap = compute()
-    val actions = DiffRefresher.diffKeyed(store.readKeyed(), newSnap).cache()
-    try {
-      val n = actions.count()
-      if (n > 0) {
-        sink.applyActions(actions)
-        store.mergeActions(actions)
-      }
-      n
-    } finally actions.unpersist()
+    applyDiff(DiffRefresher.diffKeyed(store.readKeyed(), newSnap))
   }
 
   /** The 100 TB refresh path: recompute ONLY the view keys a change
@@ -87,14 +74,15 @@ class Pipeline(
     *
     * `scopedCompute(changes)` returns `(affectedIds(id), recomputed(id,
     * doc))` where `recomputed` covers exactly the still-existing docs of
-    * `affectedIds`. Diff semantics:
+    * `affectedIds`. The old side is the snapshot restricted to
+    * `affectedIds`, so the keyed diff yields:
     *   - recomputed rows whose (id, hash) isn't in the old snapshot →
     *     upserts;
     *   - affected ids present in old but absent from recomputed →
     *     deletes;
-    *   - snapshot = old minus affected, plus recomputed — via
-    *     [[graft.refresh.SnapshotStore.mergeScoped]], which a bucketed
-    *     store serves by rewriting only the touched buckets' files.
+    *   - affected ids whose doc is unchanged → nothing: the snapshot
+    *     already holds that doc, so merging the diff alone leaves the
+    *     snapshot at old minus affected, plus recomputed.
     *
     * Pipelines without a scoped compute — and batches the view's
     * `canScope` predicate rejects (default: any table-level wildcard or
@@ -108,19 +96,26 @@ class Pipeline(
     case Some(f) =>
       val (affectedIds, recomputed) = f(changes)
       val ids = affectedIds.select(col("id")).distinct().cache()
-      val recomp = recomputed.cache()
-      try {
-        val oldAffected = store.readScopedKeyed(ids)
-        val actions = DiffRefresher.diffKeyed(oldAffected, recomp).cache()
-        try {
-          val n = actions.count()
-          if (n > 0) {
-            sink.applyActions(actions)
-            store.mergeScoped(ids, recomp)
-          }
-          n
-        } finally actions.unpersist()
-      } finally { ids.unpersist(); recomp.unpersist() }
+      try applyDiff(DiffRefresher.diffKeyed(store.readScopedKeyed(ids), recomputed))
+      finally ids.unpersist()
+  }
+
+  /** The shared refresh tail: count the diff, push it to the sink, then
+    * merge the same actions into the snapshot, so the snapshot moves in
+    * step with what the sink received. The diff reads the recomputed
+    * view exactly once, so only the change-sized ACTIONS frame is
+    * cached; the count, the sink and the merge all share it.
+    * @return #actions applied */
+  private def applyDiff(diff: DataFrame): Long = {
+    val actions = diff.cache()
+    try {
+      val n = actions.count()
+      if (n > 0) {
+        sink.applyActions(actions)
+        store.mergeActions(actions)
+      }
+      n
+    } finally actions.unpersist()
   }
 }
 

@@ -63,38 +63,6 @@ object PipelineConfig {
   }
 }
 
-object Runner {
-  /** Shared per-batch dispatch for the poll loop AND the streaming
-    * runner (one source of truth for the scoping contract): each dirty
-    * pipeline gets its RELEVANT events (filtered by source tables) and
-    * routes through refreshScoped — whose canScope falls back to a full
-    * refresh when the batch isn't key-mappable. `events = None` means
-    * the batch was too large to ship row events; only the dirty-table
-    * set is known and every dirty pipeline full-refreshes.
-    * All futures settle before the first failure re-raises (a fail-fast
-    * await would leave a straggler refresh racing the retried batch).
-    * @return view → #actions applied */
-  def dispatch(pipelines: Seq[Pipeline],
-      events: Option[Seq[graft.cdc.ChangeEvent]],
-      dirtyTables: Set[String])(
-      implicit ec: scala.concurrent.ExecutionContext): Map[String, Long] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val dirty = pipelines.filter(_.sourceTables.intersect(dirtyTables).nonEmpty)
-    val settled = Await.result(
-      Future.sequence(dirty.map { p =>
-        val work: () => Long = events match {
-          case Some(es) =>
-            () => p.refreshScoped(es.filter(e => p.sourceTables.contains(e.table)))
-          case None => () => p.refresh()
-        }
-        Future(p.view -> work()).transform(scala.util.Success(_))
-      }), Duration.Inf)
-    settled.collectFirst { case scala.util.Failure(e) => throw e }
-    settled.map(_.get).toMap
-  }
-}
-
 /** Orchestrator (A13/A14): owns all pipelines, fans setup/refresh out in
   * parallel, and surfaces worker errors instead of swallowing them —
   * the reference's `ThreadPoolExecutor` + `future.result()` semantics
@@ -132,16 +100,22 @@ class Runner(val pipelines: Seq[Pipeline], feed: ChangeFeed) {
   def backfillAll(): Map[String, Long] =
     awaitAll(pipelines.map(p => Future(p.view -> p.backfill()))).toMap
 
-  /** One poll tick. Pipelines with a scoped compute get only their
-    * relevant change events and refresh key-scoped; each pipeline's own
-    * `canScope` routes unscopable batches (wildcards; deletes without a
-    * usable before-image) to the full recompute-and-diff.
+  /** One poll tick. Each dirty pipeline gets only its relevant change
+    * events (filtered by source table) and routes through
+    * `refreshScoped`, whose `canScope` sends unscopable batches
+    * (wildcards; deletes without a usable before-image) and pipelines
+    * without a scoped compute to the full recompute-and-diff.
     * @return view → #actions applied (empty = idle). */
   def iterate(): Map[String, Long] = {
     val changed = feed.drain()
     if (changed.isEmpty) return Map.empty
+    val tables = changed.map(_.table).toSet
+    val dirty = pipelines.filter(_.sourceTables.exists(tables))
     try {
-      Runner.dispatch(pipelines, Some(changed), changed.map(_.table).toSet)
+      awaitAll(dirty.map { p =>
+        val relevant = changed.filter(e => p.sourceTables.contains(e.table))
+        Future(p.view -> p.refreshScoped(relevant))
+      }).toMap
     } catch {
       case e: Throwable =>
         // the drain already consumed the batch; put it back so the next

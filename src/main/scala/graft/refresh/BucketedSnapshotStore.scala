@@ -2,158 +2,17 @@ package graft.refresh
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Keyed `(id, doc)` snapshot table with atomic commits — the engine's
   * stand-in for the reference's materialized view storage
   * (reference: src/sinker/query_templates.py:11-12 — MV with a unique
-  * index on id).
+  * index on id). Uniqueness of `id` is an invariant of the view
+  * computation (the diff and sinks key on it), matching the
+  * reference's mandatory unique index.
   *
-  * Two implementations:
-  *   - [[MvccSnapshotStore]]: whole-snapshot versions + a pointer file.
-  *     Simple, fully atomic, but every commit rewrites the whole view —
-  *     fine for small views and tests (the deprecated
-  *     `graft.sink.ParquetIndex` wraps it).
-  *   - [[BucketedSnapshotStore]]: hash-bucketed base + merge-on-read
-  *     delta log + amortized compaction. Write I/O per refresh is
-  *     proportional to CHANGE VOLUME (one delta file), never to view
-  *     size — the store to use at 100 TB.
-  *
-  * Uniqueness of `id` is an invariant of the view computation (the diff
-  * and sinks key on it), matching the reference's mandatory unique index.
-  */
-trait SnapshotStore {
-
-  def exists: Boolean
-
-  /** Current committed snapshot `(id, doc)`. */
-  def read(): DataFrame
-
-  /** Current snapshot restricted to `ids` — layouts that can prune
-    * (bucketed) read only the relevant files. */
-  def readScoped(ids: DataFrame): DataFrame =
-    read().join(ids.select("id"), Seq("id"), "left_semi")
-
-  /** Current snapshot as `(id, h)` with `h = xxhash64(doc)` — all a
-    * refresh diff needs from the old side. Layouts that persist the
-    * hash (bucketed) serve this WITHOUT reading doc bytes. */
-  def readKeyed(): DataFrame =
-    read().select(col("id"), xxhash64(col("doc")).as("h"))
-
-  /** [[readKeyed]] restricted to `ids`. */
-  def readScopedKeyed(ids: DataFrame): DataFrame =
-    readScoped(ids).select(col("id"), xxhash64(col("doc")).as("h"))
-
-  /** Write `df` (must be `(id, doc)`) as the next full version; returns
-    * the version id. Does NOT move the pointer — call [[commit]]. */
-  def stage(df: DataFrame): String
-
-  /** Atomically make `v` the current snapshot. */
-  def commit(v: String): Unit
-
-  def readVersion(v: String): DataFrame
-
-  /** Apply a diff batch `(op: "index"|"delete", id, doc)` to the
-    * snapshot atomically: upserts replace, deletes vanish, untouched
-    * rows stay. Each id appears AT MOST ONCE per batch — a batch is a
-    * keyed diff ([[DiffRefresher]]: upsert and delete key sets are
-    * disjoint, one row per id), and layouts rely on it (the bucketed
-    * store's delta log resolves latest-wins ACROSS batches only). */
-  def mergeActions(actions: DataFrame): Unit
-
-  /** Replace all rows whose id ∈ `ids` with `recomputed` (which must
-    * cover exactly the surviving docs of `ids`), committing atomically. */
-  def mergeScoped(ids: DataFrame, recomputed: DataFrame): Unit = {
-    val keyDf = ids.select("id")
-    val deletes = keyDf
-      .join(recomputed.select("id"), Seq("id"), "left_anti")
-      .select(lit("delete").as("op"), col("id"), lit(null).cast("string").as("doc"))
-    mergeActions(
-      recomputed.select(lit("index").as("op"), col("id"), col("doc"))
-        .unionByName(deletes))
-  }
-}
-
-object SnapshotStore {
-  private[graft] val docSchema = StructType(Seq(
-    StructField("id", StringType), StructField("doc", StringType)))
-}
-
-/** MVCC layout: `<path>/v<N>/` parquet dirs plus a `_CURRENT` pointer
-  * file. Writers [[stage]] a full new version (never touching the
-  * current one) and [[commit]] by atomically swapping the pointer —
-  * readers always see a consistent snapshot, and the diff refresher can
-  * read old and new versions side by side without recomputing the view
-  * twice. The pointer file is the only piece that assumes an atomic
-  * rename, which HDFS and local filesystems provide (object stores
-  * would swap in a catalog/log here).
-  */
-class MvccSnapshotStore(spark: SparkSession, path: String) extends SnapshotStore {
-
-  private val root = new Path(path)
-  private def fs: FileSystem =
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private val currentPtr = new Path(root, "_CURRENT")
-
-  override def exists: Boolean = fs.exists(currentPtr)
-
-  def currentVersion: Option[String] =
-    if (!exists) None
-    else {
-      val in = fs.open(currentPtr)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
-      finally in.close()
-    }
-
-  override def stage(df: DataFrame): String = {
-    val v = "v" + (currentVersion.map(_.drop(1).toLong).getOrElse(0L) + 1)
-    df.select("id", "doc").write.mode("overwrite").parquet(new Path(root, v).toString)
-    v
-  }
-
-  /** Atomically repoint `_CURRENT` at `v`: write-temp then
-    * rename-with-OVERWRITE (atomic on POSIX/HDFS — no
-    * delete-then-rename window in which no pointer exists). Prunes
-    * versions older than the PREVIOUS one, so a reader holding a lazy
-    * DataFrame over the prior snapshot survives one refresh cycle
-    * (bounded MVCC grace; Delta/Iceberg generalize this with retention
-    * policies). */
-  override def commit(v: String): Unit = {
-    val tmp = new Path(root, s"_CURRENT.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(v.getBytes("UTF-8")) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      currentPtr.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, currentPtr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    Option(fs.globStatus(new Path(root, "v*"))).toSeq.flatten
-      .map(_.getPath)
-      .filter(p => versionNum(p.getName) < versionNum(v) - 1)
-      .foreach(p => fs.delete(p, true))
-  }
-
-  private def versionNum(v: String): Long = v.drop(1).toLong
-
-  override def readVersion(v: String): DataFrame =
-    spark.read.parquet(new Path(root, v).toString)
-
-  override def read(): DataFrame =
-    readVersion(currentVersion.getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $path")))
-
-  /** Whole-snapshot rewrite (this layout can't scope writes). */
-  override def mergeActions(actions: DataFrame): Unit = {
-    val merged = read()
-      .join(actions.select("id"), Seq("id"), "left_anti")
-      .unionByName(actions.filter(col("op") === "index").select("id", "doc"))
-    commit(stage(merged))
-  }
-}
-
-/** The 100 TB snapshot store: an LSM-shaped bucketed table.
-  *
-  * Layout:
+  * The 100 TB layout is an LSM-shaped bucketed table:
   * {{{
   * <path>/v3/bucket=0/part-*.parquet      base leaves (hash(id) % n)
   * <path>/v7/bucket=1/part-*.parquet
@@ -185,14 +44,13 @@ class MvccSnapshotStore(spark: SparkSession, path: String) extends SnapshotStore
   * after a grace window ([[gcGraceMs]]) so a concurrent writer's
   * not-yet-referenced files survive its in-flight commit. GC keeps
   * leaves referenced by the current OR the immediately-previous
-  * manifest — one cycle of reader grace, matching
-  * [[MvccSnapshotStore]]. A plain legacy `_CURRENT` file reads as
-  * generation 0.
+  * manifest — one cycle of reader grace, so a reader holding a lazy
+  * DataFrame over the prior snapshot survives one refresh. A plain
+  * legacy `_CURRENT` file reads as generation 0.
   */
 class BucketedSnapshotStore(
     spark: SparkSession, path: String, numBuckets: Int = 64,
-    maxDeltas: Int = 8, gcGraceMs: Long = 600000L)
-    extends SnapshotStore {
+    maxDeltas: Int = 8, gcGraceMs: Long = 600000L) {
 
   require(numBuckets > 0, "numBuckets must be positive")
 
@@ -219,8 +77,6 @@ class BucketedSnapshotStore(
 
   private def bucketOf(c: Column): Column =
     pmod(xxhash64(c), lit(effectiveBuckets))
-
-  override def exists: Boolean = manifestFiles().nonEmpty
 
   // ------------------------------------------------------------ manifest
 
@@ -417,7 +273,9 @@ class BucketedSnapshotStore(
   private val stagedWith =
     scala.collection.concurrent.TrieMap.empty[String, Int]
 
-  override def stage(df: DataFrame): String = {
+  /** Write `df` (must be `(id, doc)`) as the next full version; returns
+    * the version id. Does NOT move the pointer — call [[commit]]. */
+  def stage(df: DataFrame): String = {
     val v = nextDirName("v")
     val buckets = effectiveBuckets
     stagedWith(v) = buckets
@@ -457,7 +315,7 @@ class BucketedSnapshotStore(
   /** Full-snapshot commit: every bucket present in `v` becomes current
     * and the delta log is cleared (a backfill / full refresh wrote the
     * complete view into `v`). */
-  override def commit(v: String): Unit = withCasRetry("commit") {
+  def commit(v: String): Unit = withCasRetry("commit") {
     val (gen, prev) = currentGenAndBody()
       .map { case (g, s) => (g, parseManifest(s)) }
       .getOrElse((0L, Manifest(Map.empty, Nil)))
@@ -465,7 +323,7 @@ class BucketedSnapshotStore(
     commitManifest(Manifest(bucketsIn(v).map(_ -> v).toMap, Nil), gen, prev)
   }
 
-  override def readVersion(v: String): DataFrame =
+  def readVersion(v: String): DataFrame =
     spark.read
       .schema("id STRING, doc STRING, h BIGINT, bucket BIGINT")
       .parquet(new Path(root, v).toString)
@@ -475,9 +333,8 @@ class BucketedSnapshotStore(
   private def emptyFull: DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(SnapshotStore.docSchema.fields :+
-        org.apache.spark.sql.types.StructField("h",
-          org.apache.spark.sql.types.LongType)))
+      StructType(Seq(StructField("id", StringType),
+        StructField("doc", StringType), StructField("h", LongType))))
 
   private def readLeaves(m: Map[Long, String]): DataFrame =
     if (m.isEmpty) emptyFull
@@ -536,11 +393,14 @@ class BucketedSnapshotStore(
     mergeRead(readLeaves(m.buckets), m.deltas)
   }
 
-  override def read(): DataFrame = currentFull.select("id", "doc")
+  /** Current committed snapshot `(id, doc)`. */
+  def read(): DataFrame = currentFull.select("id", "doc")
 
-  /** Column-pruned keyed read: the doc column never leaves parquet —
-    * the per-refresh base scan is ids+hashes only. */
-  override def readKeyed(): DataFrame = currentFull.select("id", "h")
+  /** Current snapshot as `(id, h)` with `h = xxhash64(doc)` — all a
+    * refresh diff needs from the old side. Column-pruned: the doc
+    * column never leaves parquet, so the per-refresh base scan is
+    * ids+hashes only. */
+  def readKeyed(): DataFrame = currentFull.select("id", "h")
 
   /** Partition-pruned scoped read as `(id, doc, h)`: only the buckets
     * `ids` hash into are opened (≤ numBuckets driver-side values —
@@ -562,13 +422,22 @@ class BucketedSnapshotStore(
     }
   }
 
-  override def readScoped(ids: DataFrame): DataFrame =
+  /** Current snapshot restricted to `ids`. */
+  def readScoped(ids: DataFrame): DataFrame =
     scopedFull(ids).select("id", "doc")
 
-  override def readScopedKeyed(ids: DataFrame): DataFrame =
+  /** [[readKeyed]] restricted to `ids`. */
+  def readScopedKeyed(ids: DataFrame): DataFrame =
     scopedFull(ids).select("id", "h")
 
-  /** The point of this store: one delta-file append per batch — write
+  /** Apply a diff batch `(op: "index"|"delete", id, doc)` to the
+    * snapshot atomically: upserts replace, deletes vanish, untouched
+    * rows stay. Each id appears AT MOST ONCE per batch — a batch is a
+    * keyed diff ([[DiffRefresher]]: upsert and delete key sets are
+    * disjoint, one row per id), and the delta log relies on it (it
+    * resolves latest-wins ACROSS batches only).
+    *
+    * The point of this store: one delta-file append per batch — write
     * I/O ∝ change volume even when the changed ids hash into every
     * bucket. Compacts when the log reaches [[maxDeltas]] files, or
     * immediately when the base is empty (a bulk load lands straight in
@@ -576,7 +445,7 @@ class BucketedSnapshotStore(
     * trigger from manifest statistics (as Iceberg snapshots carry);
     * raw dir sizes are dominated by per-file overhead at test scale, so
     * the count rule is the honest local proxy. */
-  override def mergeActions(actions: DataFrame): Unit = {
+  def mergeActions(actions: DataFrame): Unit = {
     // data files write ONCE and are memoized — a CAS retry republishes
     // them against the fresh manifest instead of rewriting
     var stagedBulk: Option[String] = None

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *     deleted from the sink; child deletes shrink docs via the upsert
   *     branch — reference tests/test_e2e.py:141-171).
   *
-  * Cost: two hash-partitioned anti-joins on `id` — one shuffle of each
-  * snapshot, no driver-side data, no skew risk beyond the id space
+  * Cost: one hash-partitioned full-outer join on `id` — one shuffle of
+  * each snapshot, no driver-side data, no skew risk beyond the id space
   * itself. At 100 TB the win is that only the DIFF leaves the cluster:
   * sink traffic is proportional to change volume, not view size.
   */

@@ -88,49 +88,6 @@ class InMemoryIndex(val index: String, val mapping: StructType)
   def ids: Set[String] = docs.keySet.toSet
 }
 
-/** Versioned keyed parquet table, merged per batch with one anti-join
-  * + union (MERGE-by-key shape). DEPRECATED toward
-  * [[BucketedParquetIndex]]: every batch rewrites the WHOLE table, so
-  * write I/O scales with view size instead of change volume — the
-  * bucketed store (delta log + scoped compaction) is the only sink the
-  * production entry points wire. Kept for tests that want the simplest
-  * possible distributed sink. */
-@deprecated("use BucketedParquetIndex — this sink rewrites the whole " +
-  "table per batch", "0.1.0")
-class ParquetIndex(spark: SparkSession, val index: String,
-    val mapping: StructType, path: String) extends DocumentSink {
-
-  private val store = new graft.refresh.MvccSnapshotStore(spark, path)
-
-  /** Initialize empty (A16 recreate_index: delete + recreate). */
-  def recreate(): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    import spark.implicits._
-    store.commit(store.stage(
-      Seq.empty[(String, String)].toDF("id", "doc")))
-  }
-
-  override protected def doApply(actions: DataFrame): Unit = this.synchronized {
-    val acts = actions.cache()
-    try {
-      val current = store.read()
-      val touched = acts.select(col("id"))
-      val upserts = acts.filter(col("op") === "index").select("id", "doc")
-      val merged = current
-        .join(touched, Seq("id"), "left_anti")
-        .unionByName(upserts)
-      store.commit(store.stage(merged))
-    } finally acts.unpersist()
-  }
-
-  def read(): DataFrame = store.read()
-  override def get(id: String): Option[String] =
-    read().filter(col("id") === id).collect().headOption.map(_.getString(1))
-  override def count(): Long = read().count()
-}
-
 /** The 100 TB sink: delegates storage to a
   * [[graft.refresh.BucketedSnapshotStore]] — hash-bucketed base +
   * merge-on-read delta log + amortized scoped compaction. A batch

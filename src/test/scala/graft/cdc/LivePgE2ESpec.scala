@@ -162,105 +162,6 @@ class LivePgE2ESpec extends SparkSpec with BeforeAndAfterAll {
     } finally conn.dropSlot("live_feed")
   }
 
-  test("DSv2 WAL source streams REAL slot changes with LSN offsets in the checkpoint") {
-    live()
-    import spark.implicits._
-    val conn = new PsqlSlotConnection(work, port)
-    conn.createSlot("live_dsv2")
-    graft.streaming.WalSource.register("livepg-dsv2", conn)
-    try {
-      val ckpt = Files.createTempDirectory("livepg-ckpt").toString
-      val seen = scala.collection.mutable.ArrayBuffer[(Long, String, String)]()
-      val q = spark.readStream
-        .format(classOf[graft.streaming.WalSourceProvider].getName)
-        .option("slot", "live_dsv2")
-        .option("handle", "livepg-dsv2")
-        .load()
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          seen.synchronized { seen ++= df.as[(Long, String, String)].collect() }
-          ()
-        }.start()
-      try {
-        psqlc("UPDATE public.person SET name = 'Stream1' WHERE id = 'p-3'")
-        q.processAllAvailable()
-        seen.synchronized {
-          // the real UPDATE line arrived through Structured Streaming,
-          // BEGIN/COMMIT framing intact (the source is decode-agnostic)
-          seen.exists(_._3.contains("UPDATE: id[text]:'p-3'")) shouldBe true
-          seen.exists(_._3.startsWith("BEGIN")) shouldBe true
-        }
-        psqlc("UPDATE public.person SET name = 'Prof Georgios' WHERE id = 'p-3'")
-        q.processAllAvailable()
-        seen.synchronized {
-          seen.count(_._3.contains("id[text]:'p-3'")) shouldBe 2
-        }
-      } finally q.stop()
-    } finally {
-      graft.streaming.WalSource.unregister("livepg-dsv2")
-      conn.dropSlot("live_dsv2")
-    }
-  }
-
-  test("DSv2 admission cap splits batches on live txn boundaries, drops nothing") {
-    // maxLinesPerBatch = 2 against REAL multi-statement transactions:
-    // each txn carries >= 3 lines (BEGIN + rows + COMMIT), so every
-    // txn exceeds the cap and must ship WHOLE via the oversized-first-
-    // txn progress guarantee — and the commit-LSN keying (87b8755)
-    // must still deliver every line exactly through Spark's
-    // checkpointed offsets, batch by batch, on a server that shares
-    // LSNs across COMMIT and the next txn's first lines
-    live()
-    import spark.implicits._
-    val conn = new PsqlSlotConnection(work, port)
-    conn.createSlot("live_cap")
-    graft.streaming.WalSource.register("livepg-cap", conn)
-    try {
-      val ids = (1 to 4).map(i => s"cap-$i")
-      ids.foreach { id =>
-        // one txn = BEGIN + INSERT + UPDATE + COMMIT = 4 lines > cap
-        psqlc(s"""BEGIN;
-                 |INSERT INTO public.person (id, name) VALUES ('$id', 'A');
-                 |UPDATE public.person SET name = 'B' WHERE id = '$id';
-                 |COMMIT""".stripMargin)
-      }
-      val ckpt = Files.createTempDirectory("livepg-cap-ckpt").toString
-      val seen = scala.collection.mutable.ArrayBuffer[(Long, String, String)]()
-      val batchSizes = scala.collection.mutable.ArrayBuffer[Int]()
-      val q = spark.readStream
-        .format(classOf[graft.streaming.WalSourceProvider].getName)
-        .option("slot", "live_cap")
-        .option("handle", "livepg-cap")
-        .option("maxLinesPerBatch", "2")
-        .load()
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          val rows = df.as[(Long, String, String)].collect()
-          seen.synchronized { seen ++= rows; batchSizes += rows.length }
-          ()
-        }.start()
-      try {
-        q.processAllAvailable()
-        seen.synchronized {
-          // nothing dropped: every INSERT and UPDATE line arrived
-          ids.foreach { id =>
-            seen.count(_._3.contains(s"id[text]:'$id'")) shouldBe 2
-          }
-          // txns never split: each non-empty batch holds whole txns,
-          // so its line count is a multiple of 4 (BEGIN+2 rows+COMMIT)
-          batchSizes.filter(_ > 0).foreach(n => n % 4 shouldBe 0)
-          // and the cap DID bite: the 16 lines arrived across multiple
-          // batches (oversized txns ship alone), not one mega-batch
-          batchSizes.count(_ > 0) should be >= 2
-        }
-      } finally q.stop()
-      ids.foreach(id => psqlc(s"DELETE FROM public.person WHERE id = '$id'"))
-    } finally {
-      graft.streaming.WalSource.unregister("livepg-cap")
-      conn.dropSlot("live_cap")
-    }
-  }
-
   test("rename cascades into the sink and delete shrinks it (test_e2e.py:99-171 shape)") {
     live()
     val conn = new PsqlSlotConnection(work, port)

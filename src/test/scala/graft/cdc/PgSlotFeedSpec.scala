@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.pipeline.{PgSlotFeed, Pipeline, Runner}
-import graft.refresh.MvccSnapshotStore
+import graft.refresh.BucketedSnapshotStore
 import graft.sink.InMemoryIndex
 import graft.views.SchoolViews
 
@@ -101,24 +101,12 @@ class PgSlotFeedSpec extends SparkSpec {
     conn.advances shouldBe List("0/10") // no new advance for the failed batch
   }
 
-  test("destructive mode buffers a failed batch locally (reference parity)") {
-    val conn = new StubSlotConnection
-    val feed = new PgSlotFeed(conn, "sinker_slot", destructive = true)
-    feed.resetSlot()
-    conn.append(personLine("0/10", 1, "p-1"))
-    val batch = feed.drain()
-    conn.unconfirmedCount shouldBe 0 // slot already truncated
-    feed.requeue(batch)
-    conn.append(personLine("0/20", 2, "p-2"))
-    feed.drain().map(_.id) shouldBe Seq("p-1", "p-2")
-  }
-
   test("full stack: slot lines drive refresh through decode/route/diff/sink") {
     var person = Seq(("p-1", "John"), ("p-2", "Loren")).toDF("id", "name")
     val sink = new InMemoryIndex("people_slot", nameMapping)
     val pipe = new Pipeline("person_mv", "person", Set("person"),
       () => SchoolViews.personMv(person),
-      new MvccSnapshotStore(spark, tmp()), sink)
+      new BucketedSnapshotStore(spark, tmp()), sink)
     val conn = new StubSlotConnection
     val feed = new PgSlotFeed(conn, "sinker_slot")
     val runner = new Runner(Seq(pipe), feed)
@@ -151,7 +139,7 @@ class PgSlotFeedSpec extends SparkSpec {
         if (wedge.get) throw new IllegalStateException("transient compute failure")
         throw new IllegalStateException("unreachable")
       },
-      new MvccSnapshotStore(spark, tmp()),
+      new BucketedSnapshotStore(spark, tmp()),
       new InMemoryIndex("boom_slot", nameMapping))
     intercept[IllegalStateException](new Runner(Seq(failingPipe), feed).iterate())
     wedge.set(false)

@@ -18,7 +18,6 @@ class GraftSettingsSpec extends AnyFunSuite with Matchers {
     s.sinkTimeoutMs shouldBe 60000 // ELASTICSEARCH_TIMEOUT=60 (s)
     s.snapshotBuckets shouldBe 64
     s.snapshotMaxDeltas shouldBe 8
-    s.triggerIntervalMs shouldBe 0L
   }
 
   test("environment overrides use the reference's variable names") {

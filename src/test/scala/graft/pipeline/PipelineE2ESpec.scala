@@ -7,8 +7,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.refresh.{BucketedSnapshotStore, MvccSnapshotStore}
-import graft.sink.{DocumentSink, InMemoryIndex, ParquetIndex}
+import graft.refresh.BucketedSnapshotStore
+import graft.sink.{DocumentSink, InMemoryIndex}
 import graft.views.SchoolViews
 
 /** Golden end-to-end lifecycle ported from the reference
@@ -200,20 +200,5 @@ class PipelineE2ESpec extends SparkSpec {
       ("index", "p-1", """{"name": "Jane"}"""),
       ("delete", "p-3", null.asInstanceOf[String])).toDF("op", "id", "doc"))
     idx.count() shouldBe 2
-  }
-
-  test("ParquetIndex distributed sink: backfill, merge, delete") {
-    val idx = (new ParquetIndex(spark, "people_pq", peopleMapping,
-      tmp())): @annotation.nowarn("cat=deprecation")
-    idx.recreate()
-    idx.applyActions(Seq(
-      ("index", "p-1", """{"name": "John"}"""),
-      ("index", "p-2", """{"name": "Loren"}""")).toDF("op", "id", "doc"))
-    idx.count() shouldBe 2
-    idx.applyActions(Seq(
-      ("index", "p-1", """{"name": "Jane"}"""),
-      ("delete", "p-2", null.asInstanceOf[String])).toDF("op", "id", "doc"))
-    idx.count() shouldBe 1
-    idx.get("p-1") shouldBe Some("""{"name": "Jane"}""")
   }
 }

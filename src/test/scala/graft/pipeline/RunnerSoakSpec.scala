@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.cdc.ChangeEvent
-import graft.refresh.{BucketedSnapshotStore, MvccSnapshotStore}
+import graft.refresh.BucketedSnapshotStore
 import graft.sink.InMemoryIndex
 import graft.views.SchoolViews
 

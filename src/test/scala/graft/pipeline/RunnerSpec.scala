@@ -3,19 +3,18 @@ package graft.pipeline
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.cdc.ChangeEvent
-import graft.refresh.{BucketedSnapshotStore, MvccSnapshotStore}
+import graft.refresh.BucketedSnapshotStore
 import graft.sink.InMemoryIndex
 import graft.views.SchoolViews
 
 /** Runner orchestration semantics (reference: src/sinker/runner.py):
   * parallel backfill fan-out, dirty-view detection, change-storm
-  * coalescing, error surfacing, idle ticks, config load, and the
-  * Structured Streaming backfill-then-tail variant. */
+  * coalescing, error surfacing, idle ticks, config load, key-scoped
+  * routing, and concurrent refresh of several dirty views in one tick. */
 class RunnerSpec extends SparkSpec {
 
   import spark.implicits._
@@ -41,10 +40,10 @@ class RunnerSpec extends SparkSpec {
     val sink2 = new InMemoryIndex("people_copy", nameMapping)
     val p1 = new Pipeline("person_mv", "person", Set("person"),
       () => { computes1.incrementAndGet(); SchoolViews.personMv(person) },
-      new MvccSnapshotStore(spark, tmp()), sink1)
+      new BucketedSnapshotStore(spark, tmp()), sink1)
     val p2 = new Pipeline("person_copy_mv", "person", Set("person", "extra"),
       () => { computes2.incrementAndGet(); SchoolViews.personMv(person) },
-      new MvccSnapshotStore(spark, tmp()), sink2)
+      new BucketedSnapshotStore(spark, tmp()), sink2)
     val feed = new InMemoryChangeFeed
     val runner = new Runner(Seq(p1, p2), feed)
 
@@ -79,7 +78,7 @@ class RunnerSpec extends SparkSpec {
     val person = Seq(("p-1", "John")).toDF("id", "name")
     val pipe = new Pipeline("person_mv", "person", Set("person"),
       () => SchoolViews.personMv(person),
-      new MvccSnapshotStore(spark, tmp()), failingSink)
+      new BucketedSnapshotStore(spark, tmp()), failingSink)
     val e = intercept[IllegalStateException](
       new Runner(Seq(pipe), new InMemoryChangeFeed).backfillAll())
     e.getMessage should include("Boom!")
@@ -88,7 +87,7 @@ class RunnerSpec extends SparkSpec {
   test("worker errors surface from iterate (test_e2e.py:35-46)") {
     val boom = new Pipeline("boom_mv", "t", Set("t"),
       () => throw new IllegalStateException("Boom!"),
-      new MvccSnapshotStore(spark, tmp()),
+      new BucketedSnapshotStore(spark, tmp()),
       new InMemoryIndex("boom", nameMapping))
     val feed = new InMemoryChangeFeed
     feed.append(mkEvent("t"))
@@ -96,41 +95,11 @@ class RunnerSpec extends SparkSpec {
     e.getMessage shouldBe "Boom!"
   }
 
-  test("streaming backfill-then-tail with checkpointed offsets (A2/A14/A17)") {
-    var person = Seq(("p-1", "John"), ("p-2", "Loren")).toDF("id", "name")
-    val sink = new InMemoryIndex("people_stream", nameMapping)
-    val pipe = new Pipeline("person_mv", "person", Set("person"),
-      () => SchoolViews.personMv(person),
-      new MvccSnapshotStore(spark, tmp()), sink)
-    pipe.backfill() shouldBe 2
-
-    val sr = new StreamingRunner(spark, Seq(pipe), tmp() + "/ckpt")
-    sr.resetCheckpoint()
-    val stream = MemoryStream[(Long, String, String)](
-      org.apache.spark.sql.Encoders.product[(Long, String, String)], spark)
-    val query = sr.start(stream.toDF().toDF("xid", "lsn", "data"))
-    try {
-      person = person.withColumn("name",
-        org.apache.spark.sql.functions.when($"id" === "p-1", "Jane")
-          .otherwise($"name"))
-      stream.addData((1L, "0/2",
-        "table public.person: UPDATE: id[text]:'p-1'"))
-      query.processAllAvailable()
-      sink.get("p-1").get should include("Jane")
-
-      // unrelated WAL noise: scanned and dropped, no state change
-      stream.addData((2L, "0/3", "COMMIT 2"),
-        (3L, "0/4", "table public.unrelated: INSERT: id[text]:'x-1'"))
-      query.processAllAvailable()
-      sink.count() shouldBe 2
-    } finally query.stop()
-  }
-
-  test("streaming batches key-scope the refresh; oversize batches fall back to full") {
+  test("a scopable batch key-scopes the refresh and never runs the full compute") {
     var person = Seq(("p-1", "John"), ("p-2", "Loren")).toDF("id", "name")
     val fullCalls = new AtomicInteger(0)
     val scopedCalls = new AtomicInteger(0)
-    val sink = new InMemoryIndex("people_scoped_stream", nameMapping)
+    val sink = new InMemoryIndex("people_scoped", nameMapping)
     def scoped(events: Seq[ChangeEvent]) = {
       scopedCalls.incrementAndGet()
       val ids = events.map(_.id)
@@ -139,41 +108,22 @@ class RunnerSpec extends SparkSpec {
     }
     val pipe = new Pipeline("person_mv", "person", Set("person"),
       () => { fullCalls.incrementAndGet(); SchoolViews.personMv(person) },
-      new MvccSnapshotStore(spark, tmp()), sink,
+      new BucketedSnapshotStore(spark, tmp()), sink,
       scopedCompute = Some(scoped))
-    pipe.backfill()
+    val feed = new InMemoryChangeFeed
+    val runner = new Runner(Seq(pipe), feed)
+    runner.backfillAll() shouldBe Map("person_mv" -> 2)
     val fullAfterBackfill = fullCalls.get()
 
-    val sr = new StreamingRunner(spark, Seq(pipe), tmp() + "/ckpt")
-    val stream = MemoryStream[(Long, String, String)](
-      org.apache.spark.sql.Encoders.product[(Long, String, String)], spark)
-    val query = sr.start(stream.toDF().toDF("xid", "lsn", "data"))
-    try {
-      person = Seq(("p-1", "Jane"), ("p-2", "Loren")).toDF("id", "name")
-      stream.addData((1L, "0/2", "table public.person: UPDATE: id[text]:'p-1'"))
-      query.processAllAvailable()
-      sink.get("p-1").get should include("Jane")
-      scopedCalls.get() shouldBe 1
-      fullCalls.get() shouldBe fullAfterBackfill // stayed on the scoped path
-    } finally query.stop()
-
-    // a runner with a zero scoping budget routes every batch to full refresh
-    val sr0 = new StreamingRunner(spark, Seq(pipe), tmp() + "/ckpt0",
-      maxScopedEvents = 0)
-    val stream0 = MemoryStream[(Long, String, String)](
-      org.apache.spark.sql.Encoders.product[(Long, String, String)], spark)
-    val query0 = sr0.start(stream0.toDF().toDF("xid", "lsn", "data"))
-    try {
-      person = Seq(("p-1", "Janet"), ("p-2", "Loren")).toDF("id", "name")
-      stream0.addData((2L, "0/3", "table public.person: UPDATE: id[text]:'p-1'"))
-      query0.processAllAvailable()
-      sink.get("p-1").get should include("Janet")
-      fullCalls.get() shouldBe fullAfterBackfill + 1
-      scopedCalls.get() shouldBe 1 // unchanged
-    } finally query0.stop()
+    person = Seq(("p-1", "Jane"), ("p-2", "Loren")).toDF("id", "name")
+    feed.append(mkEvent("person", id = "p-1"))
+    runner.iterate() shouldBe Map("person_mv" -> 1)
+    sink.get("p-1").get should include("Jane")
+    scopedCalls.get() shouldBe 1
+    fullCalls.get() shouldBe fullAfterBackfill // stayed on the scoped path
   }
 
-  test("streaming batch fans refreshes out in parallel and surfaces errors (A13)") {
+  test("one tick refreshes two dirty pipelines concurrently (A13)") {
     var person = Seq(("p-1", "John")).toDF("id", "name")
     val active = new AtomicInteger(0)
     val maxActive = new AtomicInteger(0)
@@ -186,39 +136,20 @@ class RunnerSpec extends SparkSpec {
     val sinkA = new InMemoryIndex("par_a", nameMapping)
     val sinkB = new InMemoryIndex("par_b", nameMapping)
     val pa = new Pipeline("a_mv", "person", Set("person"),
-      () => slowCompute(), new MvccSnapshotStore(spark, tmp()), sinkA)
+      () => slowCompute(), new BucketedSnapshotStore(spark, tmp()), sinkA)
     val pb = new Pipeline("b_mv", "person", Set("person"),
-      () => slowCompute(), new MvccSnapshotStore(spark, tmp()), sinkB)
-    pa.backfill(); pb.backfill()
+      () => slowCompute(), new BucketedSnapshotStore(spark, tmp()), sinkB)
+    val feed = new InMemoryChangeFeed
+    val runner = new Runner(Seq(pa, pb), feed)
+    runner.backfillAll()
+    maxActive.set(0)
 
-    val sr = new StreamingRunner(spark, Seq(pa, pb), tmp() + "/ckpt")
-    val stream = MemoryStream[(Long, String, String)](
-      org.apache.spark.sql.Encoders.product[(Long, String, String)], spark)
-    val query = sr.start(stream.toDF().toDF("xid", "lsn", "data"))
-    try {
-      person = Seq(("p-1", "Jane")).toDF("id", "name")
-      stream.addData((1L, "0/2", "table public.person: UPDATE: id[text]:'p-1'"))
-      query.processAllAvailable()
-      sinkA.get("p-1").get should include("Jane")
-      sinkB.get("p-1").get should include("Jane")
-      // the two view recomputes overlapped inside one micro-batch
-      maxActive.get() shouldBe 2
-    } finally query.stop()
-
-    // a failing refresh fails the batch (checkpoint replay then retries)
-    val boom = new Pipeline("boom_mv", "person", Set("person"),
-      () => throw new IllegalStateException("stream Boom!"),
-      new MvccSnapshotStore(spark, tmp()),
-      new InMemoryIndex("par_boom", nameMapping))
-    val sr2 = new StreamingRunner(spark, Seq(boom), tmp() + "/ckpt2")
-    val stream2 = MemoryStream[(Long, String, String)](
-      org.apache.spark.sql.Encoders.product[(Long, String, String)], spark)
-    val query2 = sr2.start(stream2.toDF().toDF("xid", "lsn", "data"))
-    try {
-      stream2.addData((1L, "0/2", "table public.person: UPDATE: id[text]:'p-1'"))
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
-        query2.processAllAvailable())
-      e.getMessage should include("stream Boom!")
-    } finally query2.stop()
+    person = Seq(("p-1", "Jane")).toDF("id", "name")
+    feed.append(mkEvent("person"))
+    runner.iterate() shouldBe Map("a_mv" -> 1, "b_mv" -> 1)
+    sinkA.get("p-1").get should include("Jane")
+    sinkB.get("p-1").get should include("Jane")
+    // the two view recomputes overlapped inside one tick
+    maxActive.get() shouldBe 2
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.cdc.ChangeEvent
-import graft.refresh.{BucketedSnapshotStore, MvccSnapshotStore}
+import graft.refresh.BucketedSnapshotStore
 import graft.sink.InMemoryIndex
 import graft.views.SchoolViews
 
@@ -59,7 +59,7 @@ class ScopedRefreshSpec extends SparkSpec {
       fullComputes.incrementAndGet()
       SchoolViews.courseMv(course, teacher, student, person, enrollment)
     },
-    new MvccSnapshotStore(spark, Files.createTempDirectory("graft-scoped").toString),
+    new BucketedSnapshotStore(spark, Files.createTempDirectory("graft-scoped").toString),
     sink,
     scopedCompute = Some(changes => {
       scopedComputes.incrementAndGet()
@@ -94,7 +94,14 @@ class ScopedRefreshSpec extends SparkSpec {
       Some("""{"id":"e-2","student_id":"s-2","course_id":"c-1","grade":3.14}"""),
       "0/5", 5L)
     affectedOf(upd) shouldBe Set("c-1")
-    pipe.refreshScoped(Seq(upd)) shouldBe 1
+    // an unchanged course row rides along: c-2 is affected but its doc
+    // is the same, so the diff carries no action for it and the merge
+    // must leave the snapshot's c-2 doc in place
+    val sameC2 = ev("course", "c-2")
+    affectedOf(upd, sameC2) shouldBe Set("c-1", "c-2")
+    val full = fullComputes.get()
+    pipe.refreshScoped(Seq(upd, sameC2)) shouldBe 1
+    fullComputes.get() shouldBe full // stayed on the scoped path
     sink.get("c-1").get should include("2.71")
     pipe.refresh() shouldBe 0
   }

@@ -29,6 +29,12 @@ class BucketedSnapshotStoreSpec extends SparkSpec {
     new java.io.File(dir).listFiles().toSeq
       .map(_.getName).filter(n => n.startsWith("d")).sorted
 
+  /** A keyed diff batch: `upserts` as index actions, `deletes` as
+    * delete actions. */
+  private def acts(upserts: Seq[(String, String)], deletes: Seq[String] = Nil) =
+    (upserts.map { case (id, doc) => ("index", id, doc) } ++
+      deletes.map(id => ("delete", id, null: String))).toDF("op", "id", "doc")
+
   private def snap(n: Int, tag: String) =
     (1 to n).map(i => (s"id-$i", s"""{"v":"$tag-$i"}""")).toDF("id", "doc")
 
@@ -40,9 +46,9 @@ class BucketedSnapshotStoreSpec extends SparkSpec {
     assert(before.nonEmpty)
 
     // touch 3 ids: 2 updated, 1 deleted
-    store.mergeScoped(
-      Seq("id-1", "id-2", "id-3").toDF("id"),
-      Seq(("id-1", """{"v":"b-1"}"""), ("id-2", """{"v":"b-2"}""")).toDF("id", "doc"))
+    store.mergeActions(acts(
+      Seq(("id-1", """{"v":"b-1"}"""), ("id-2", """{"v":"b-2"}""")),
+      deletes = Seq("id-3")))
 
     // the base is byte-identical — the merge wrote only a delta
     assert(baseFiles(dir) == before, "base bucket files were rewritten")
@@ -63,17 +69,14 @@ class BucketedSnapshotStoreSpec extends SparkSpec {
     val before = baseFiles(dir)
 
     // two delta merges to the SAME id: latest must win on read
-    store.mergeScoped(Seq("id-5").toDF("id"),
-      Seq(("id-5", """{"v":"r1"}""")).toDF("id", "doc"))
-    store.mergeScoped(Seq("id-5").toDF("id"),
-      Seq(("id-5", """{"v":"r2"}""")).toDF("id", "doc"))
+    store.mergeActions(acts(Seq(("id-5", """{"v":"r1"}"""))))
+    store.mergeActions(acts(Seq(("id-5", """{"v":"r2"}"""))))
     assert(store.read().as[(String, String)].collect().toMap
       .apply("id-5") == """{"v":"r2"}""")
     assert(baseFiles(dir) == before)
 
     // third merge hits maxDeltas → compaction: only id-5's bucket moves
-    store.mergeScoped(Seq("id-5").toDF("id"),
-      Seq(("id-5", """{"v":"r3"}""")).toDF("id", "doc"))
+    store.mergeActions(acts(Seq(("id-5", """{"v":"r3"}"""))))
     val after = baseFiles(dir)
     val carried = after.keySet.intersect(before.keySet)
     carried.foreach { f => assert(after(f) == before(f), s"file $f was rewritten") }
@@ -90,8 +93,7 @@ class BucketedSnapshotStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-bucketed3").toString
     val store = new BucketedSnapshotStore(spark, dir, numBuckets = 8)
     store.commit(store.stage(snap(100, "a")))
-    store.mergeScoped(Seq("id-7").toDF("id"),
-      Seq(("id-7", """{"v":"n-7"}""")).toDF("id", "doc"))
+    store.mergeActions(acts(Seq(("id-7", """{"v":"n-7"}"""))))
     val scoped = store.readScoped(Seq("id-7", "id-8").toDF("id"))
       .as[(String, String)].collect().toMap
     assert(scoped == Map("id-7" -> """{"v":"n-7"}""", "id-8" -> """{"v":"a-8"}"""))
@@ -112,8 +114,7 @@ class BucketedSnapshotStoreSpec extends SparkSpec {
       maxDeltas = 2, gcGraceMs = 0L)
     store.commit(store.stage(snap(40, "a")))
     for (round <- 1 to 6) {
-      store.mergeScoped(Seq("id-1").toDF("id"),
-        Seq(("id-1", s"""{"v":"r-$round"}""")).toDF("id", "doc"))
+      store.mergeActions(acts(Seq(("id-1", s"""{"v":"r-$round"}"""))))
     }
     assert(store.read().count() == 40)
     assert(store.read().as[(String, String)].collect().toMap
@@ -132,8 +133,7 @@ class BucketedSnapshotStoreSpec extends SparkSpec {
     val reopened = new BucketedSnapshotStore(spark, dir, numBuckets = 2)
     reopened.readScoped(Seq("id-7").toDF("id"))
       .as[(String, String)].collect().toSeq shouldBe Seq(("id-7", """{"v":"a-7"}"""))
-    reopened.mergeScoped(Seq("id-7").toDF("id"),
-      Seq(("id-7", """{"v":"n-7"}""")).toDF("id", "doc"))
+    reopened.mergeActions(acts(Seq(("id-7", """{"v":"n-7"}"""))))
     reopened.read().count() shouldBe 200
     reopened.readScoped(Seq("id-7").toDF("id"))
       .as[(String, String)].collect().toSeq shouldBe Seq(("id-7", """{"v":"n-7"}"""))
@@ -147,8 +147,7 @@ class BucketedSnapshotStoreSpec extends SparkSpec {
     val store = new BucketedSnapshotStore(spark, dir, numBuckets = 4, maxDeltas = 2)
     store.commit(store.stage(snap(50, "a")))
     // stack a delta so readKeyed crosses base AND log
-    store.mergeScoped(Seq("id-3").toDF("id"),
-      Seq(("id-3", """{"v":"d-3"}""")).toDF("id", "doc"))
+    store.mergeActions(acts(Seq(("id-3", """{"v":"d-3"}"""))))
     val newSnap = ((4 to 52).map(i => (s"id-$i", s"""{"v":"a-$i"}""")) :+
       (("id-3", """{"v":"n-3"}"""))).toDF("id", "doc")
     def norm(df: org.apache.spark.sql.DataFrame) =
@@ -163,8 +162,7 @@ class BucketedSnapshotStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-bucketed5").toString
     val store = new BucketedSnapshotStore(spark, dir, numBuckets = 2, maxDeltas = 1)
     store.commit(store.stage(Seq(("only", "{}")).toDF("id", "doc")))
-    store.mergeScoped(Seq("only").toDF("id"),
-      Seq.empty[(String, String)].toDF("id", "doc"))
+    store.mergeActions(acts(Nil, deletes = Seq("only")))
     assert(store.read().count() == 0)
     assert(store.readScoped(Seq("only").toDF("id")).count() == 0)
   }

@@ -7,7 +7,8 @@ import scala.util.Random
 import graft.SparkSpec
 
 /** Model-based soak of [[BucketedSnapshotStore]]: a scripted random
-  * sequence of delta merges, scoped merges, full commits and reopens is
+  * sequence of delta merges, scoped merges (an affected id set, some of
+  * it re-upserted and the rest deleted), full commits and reopens is
   * applied both to the store and to a driver-side Map model; after
   * every step the store's full read, a scoped read and the keyed read
   * must agree with the model. Exercises delta stacking, latest-wins,
@@ -68,7 +69,9 @@ class BucketedStoreSoakSpec extends SparkSpec {
           val affected = rnd.shuffle(idSpace).take(1 + rnd.nextInt(6))
           val survivors = affected.filter(_ => rnd.nextBoolean())
             .map(id => (id, docOf(id, step)))
-          store.mergeScoped(affected.toDF("id"), survivors.toDF("id", "doc"))
+          val gone = affected.filterNot(id => survivors.exists(_._1 == id))
+          store.mergeActions((survivors.map { case (id, d) => ("index", id, d) } ++
+            gone.map(id => ("delete", id, null: String))).toDF("op", "id", "doc"))
           affected.foreach(model.remove)
           survivors.foreach { case (id, d) => model(id) = d }
         case 2 => // full snapshot replace
