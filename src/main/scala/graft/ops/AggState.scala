@@ -1,12 +1,12 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.ops.StagedSwap.fsFor
 
 /** Persisted partial-aggregate state: incremental view maintenance for
   * metric tables, laid out so a delta refresh costs the DELTA's bucket
@@ -83,6 +83,14 @@ import org.apache.spark.sql.functions._
   * of them. The recompute alternative re-scans every fact row for the
   * touched groups; the rebuild alternative re-aggregates and rewrites
   * everything. ScaleSoak's ivm arms measure both contrasts.
+  *
+  * ==Crash contract==
+  * Full rewrites ([[write]], the rebuckets, [[shrinkDistinctK]]) are
+  * [[StagedSwap]] whole-store swaps through a `_rebucketing` stage
+  * whose marker is the meta. Mutating entry points run the module's
+  * writer-side `recover` first; read paths only heal a missing live
+  * dir ([[StagedSwap.healIfMissing]]), so a reader never deletes a
+  * running rewrite's stage.
   */
 object AggState {
 
@@ -98,9 +106,6 @@ object AggState {
   private val SumLayout = 2
   private val DistinctLayout = 1
 
-  private def fsFor(path: String, spark: SparkSession): FileSystem =
-    new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** The canonical text of the caller's bucket expression — the
     * Column's own rendering of its node tree, deterministic for a
     * given construction (no ids, no session state), so two sessions
@@ -110,42 +115,24 @@ object AggState {
   private def bucketSpecOf(bucketOf: Column): String =
     bucketOf.toString.replaceAll("\\s+", " ").trim
 
-  /** Persist the store's parameters beside its data — the
-    * [[DedupIndex]] checkParams discipline for path-based stores: a
-    * drifted `quantScale` (sums in a different fixed-point domain), a
-    * drifted `k` (under-filled sketches), or a drifted bucket
-    * expression (partials landing in buckets the probe will never
-    * read) all corrupt SILENTLY if only caller discipline guards them.
-    * Written LAST, after the data — files starting with `_` are
-    * invisible to the parquet reader. */
-  private def stampMeta(spark: SparkSession, path: String, kind: String,
-      layout: Int, params: Seq[(String, String)]): Unit = {
-    val fs = fsFor(path, spark)
-    val body = (Seq("kind" -> kind, "layout" -> layout.toString) ++ params)
-      .map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n")
-    val out = fs.create(new HPath(path, MetaFile), true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  /** The store's parameters as its meta body — the [[DedupIndex]]
+    * checkParams discipline for path-based stores: a drifted
+    * `quantScale` (sums in a different fixed-point domain), a drifted
+    * `k` (under-filled sketches), or a drifted bucket expression
+    * (partials landing in buckets the probe will never read) all
+    * corrupt SILENTLY if only caller discipline guards them. Written
+    * LAST, after the data — files starting with `_` are invisible to
+    * the parquet reader. */
+  private def metaBody(kind: String, layout: Int,
+      params: Seq[(String, String)]): String =
+    StagedSwap.renderKv(
+      Seq("kind" -> kind, "layout" -> layout.toString) ++ params)
 
   private def readMeta(spark: SparkSession,
       path: String): Option[Map[String, String]] = {
     val fs = fsFor(path, spark)
     val p = new HPath(path, MetaFile)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val body =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](256)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
-    Some(body.linesIterator.filter(_.indexOf('=') > 0).map { l =>
-      val i = l.indexOf('=')
-      l.substring(0, i) -> l.substring(i + 1)
-    }.toMap)
+    if (fs.exists(p)) Some(StagedSwap.readKv(fs, p)) else None
   }
 
   /** Fail loudly when a caller's parameters drift from the ones
@@ -187,7 +174,8 @@ object AggState {
   private def stampIfMissing(spark: SparkSession, path: String,
       kind: String, layout: Int, params: Seq[(String, String)]): Unit =
     if (readMeta(spark, path).isEmpty)
-      stampMeta(spark, path, kind, layout, params)
+      StagedSwap.writeString(fsFor(path, spark), new HPath(path, MetaFile),
+        metaBody(kind, layout, params))
 
   private def sumParams(quantScale: Int,
       bucketOf: Column): Seq[(String, String)] =
@@ -222,7 +210,7 @@ object AggState {
     * so a typical delta's groups land in few buckets, e.g. a key-range
     * floor for range-affine deltas or a hash mod for uniformly spread
     * ones). Each bucket is co-located to one file. STAGED through
-    * [[swapIn]] even on the initial build: a direct overwrite would
+    * [[restage]] even on the initial build: a direct overwrite would
     * delete a previous generation's meta before the data lands, so a
     * crash inside write() could silently DEMOTE a stamped store to the
     * unchecked legacy class (the next maintenance call with drifted
@@ -232,7 +220,7 @@ object AggState {
   def write(base: DataFrame, groupCols: Seq[String], valueCol: String,
       quantScale: Int, bucketOf: Column, path: String): Unit = {
     recover(base.sparkSession, path)
-    swapIn(base.sparkSession, path,
+    restage(base.sparkSession, path,
       partials(base, groupCols, valueCol, quantScale), bucketOf,
       "sum", SumLayout, sumParams(quantScale, bucketOf))
   }
@@ -247,7 +235,7 @@ object AggState {
   def refresh(spark: SparkSession, path: String, delta: DataFrame,
       groupCols: Seq[String], valueCol: String, quantScale: Int,
       bucketOf: Column): DataFrame = {
-    recoverIfMissing(spark, path)
+    heal(spark, path)
     checkMeta(spark, path, "sum", SumLayout,
       sumParams(quantScale, bucketOf): _*)
     val d = partials(delta, groupCols, valueCol, quantScale)
@@ -430,7 +418,7 @@ object AggState {
     * the probe path (that is [[refresh]]). */
   def merged(spark: SparkSession, path: String,
       groupCols: Seq[String]): DataFrame = {
-    recoverIfMissing(spark, path)
+    heal(spark, path)
     checkMeta(spark, path, "sum", SumLayout)
     residentAgg(readStore(spark, path), groupCols)
   }
@@ -448,7 +436,7 @@ object AggState {
     * scoring a batch against a maintained summary. */
   def mergedFor(spark: SparkSession, path: String, keys: DataFrame,
       groupCols: Seq[String], bucketOf: Column): DataFrame = {
-    recoverIfMissing(spark, path)
+    heal(spark, path)
     checkMeta(spark, path, "sum", SumLayout)
     val k = keys.select(groupCols.map(col): _*).distinct()
       .withColumn("pbucket", bucketOf)
@@ -470,7 +458,7 @@ object AggState {
     * folds them. Column-pruned scan of the epoch column only;
     * kind-agnostic (no meta check) by design. */
   def layerCount(spark: SparkSession, path: String): Long = {
-    recoverIfMissing(spark, path)
+    heal(spark, path)
     readStore(spark, path).select(col("epoch")).distinct().count()
   }
 
@@ -495,18 +483,16 @@ object AggState {
     * validates against it — passing the OLD expression after a
     * rebucket fails loudly. `quantScale` must still match the store's
     * stamp. Full rewrite by construction (every row moves buckets),
-    * STAGED: [[swapIn]] writes the new generation beside the store
-    * with its meta LAST (= stage-complete marker), then swaps via two
-    * renames — a crash in the swap window rolls FORWARD at the next
-    * entry point ([[recover]]/[[recoverIfMissing]]); a crash before
-    * the swap leaves the old generation live and the rebucket simply
-    * "didn't happen" (AggStateSpec pins each crash state). */
+    * STAGED through [[restage]] — a crash in the swap window rolls
+    * FORWARD at the next entry point; a crash before the swap leaves
+    * the old generation live and the rebucket simply "didn't happen"
+    * (AggStateSpec pins each crash state). */
   def rebucket(spark: SparkSession, path: String, groupCols: Seq[String],
       valueCol: String, quantScale: Int, newBucketOf: Column): Unit = {
     recover(spark, path)
     checkMeta(spark, path, "sum", SumLayout,
       "quantScale" -> quantScale.toString)
-    swapIn(spark, path,
+    restage(spark, path,
       residentAgg(readStore(spark, path), groupCols), newBucketOf,
       "sum", SumLayout, sumParams(quantScale, newBucketOf))
   }
@@ -517,7 +503,7 @@ object AggState {
       newBucketOf: Column): Unit = {
     recover(spark, path)
     checkMeta(spark, path, "distinct", DistinctLayout, "k" -> k.toString)
-    swapIn(spark, path,
+    restage(spark, path,
       residentSketch(readStore(spark, path), groupCols, k), newBucketOf,
       "distinct", DistinctLayout, distinctParams(k, newBucketOf))
   }
@@ -617,9 +603,9 @@ object AggState {
     * loudly. The deployment reason to shrink: a store sized for ±1.6%
     * error (k=4096) that a cost review re-budgets to ±6% (k=256) drops
     * 16× of its dominant column without touching the fact table.
-    * Staged swap with the meta (new k, bucket spec carried VERBATIM)
-    * written into the stage last — [[swapIn]]'s crash contract; the
-    * store keeps its bucket geometry, so rows keep their pbucket.
+    * Staged through [[restage]] with the meta (new k, bucket spec
+    * carried VERBATIM); the store keeps its bucket geometry, so rows
+    * keep their pbucket.
     * Requires a stamped store: the shrink validates against (and
     * restamps) the persisted k, and a meta-less legacy store has no k
     * to validate — run any maintenance write first to stamp it. */
@@ -640,19 +626,10 @@ object AggState {
         "rebuild from source via writeDistinct")
     val groupCols = spark.read.parquet(path).columns
       .filterNot(Set("ks", "epoch", "pbucket")).toSeq
-    val fs = fsFor(path, spark)
-    val tmp = path + "_rebucketing"
-    fs.delete(new HPath(tmp), true)
-    residentSketch(readStore(spark, path), groupCols :+ "pbucket", newK)
-      .withColumn("epoch", lit(-1L))
-      .repartition(col("pbucket"))
-      .write.mode("overwrite").partitionBy("pbucket").parquet(tmp)
-    stampMeta(spark, tmp, "distinct", DistinctLayout,
+    restage(spark, path,
+      residentSketch(readStore(spark, path), groupCols :+ "pbucket", newK),
+      col("pbucket"), "distinct", DistinctLayout,
       Seq("k" -> newK.toString) ++ m.get("bucketSpec").map("bucketSpec" -> _))
-    val old = new HPath(path + "_old")
-    if (fs.exists(new HPath(path))) fs.rename(new HPath(path), old)
-    fs.rename(new HPath(tmp), new HPath(path))
-    fs.delete(old, true)
   }
 
   // ==================================================================
@@ -771,14 +748,14 @@ object AggState {
 
   /** Build the heavy-hitter store: exact per-(group, item) counts of
     * `base`, compressed to ≤ k counters per group, persisted on the
-    * bucket layout with kind "mg" stamped. Staged through [[swapIn]]
+    * bucket layout with kind "mg" stamped. Staged through [[restage]]
     * ([[write]]'s crash contract). */
   def writeMg(base: DataFrame, groupCols: Seq[String], itemCol: String,
       k: Int, bucketOf: Column, path: String): Unit = {
     require(k > 0, s"k must be positive, got $k")
     recover(base.sparkSession, path)
     val partials = mgPartials(base, groupCols, itemCol)
-    swapIn(base.sparkSession, path,
+    restage(base.sparkSession, path,
       mgTombstones(mgCompress(partials, groupCols, k),
         partials.select(groupCols.map(col): _*).distinct(), groupCols),
       bucketOf, "mg", MgLayout, mgParams(k, bucketOf))
@@ -916,7 +893,7 @@ object AggState {
     * layers are exact, so the completeness bound only tightens. */
   def mgSummary(spark: SparkSession, path: String,
       groupCols: Seq[String]): DataFrame = {
-    recoverIfMissing(spark, path)
+    heal(spark, path)
     checkMeta(spark, path, "mg", MgLayout)
     residentMg(readStore(spark, path), groupCols)
   }
@@ -932,7 +909,7 @@ object AggState {
       groupCols: Seq[String], k: Int, newBucketOf: Column): Unit = {
     recover(spark, path)
     checkMeta(spark, path, "mg", MgLayout, "k" -> k.toString)
-    swapIn(spark, path,
+    restage(spark, path,
       mgCompress(residentMg(readStore(spark, path), groupCols),
         groupCols, k),
       newBucketOf, "mg", MgLayout, mgParams(k, newBucketOf))
@@ -1003,64 +980,30 @@ object AggState {
     stampIfMissing(spark, path, "mg", MgLayout, mgParams(k, bucketOf))
   }
 
-  /** Stage `rows` under the new bucket column beside the store (the
-    * output cannot overwrite the path its plan is still reading), with
-    * the NEW meta written into the stage LAST (= stage-complete
-    * marker), then swap via two renames — [[CcState.compact]]'s
-    * protocol: the old generation stays intact until the stage is
-    * complete, and a crash in the swap window rolls FORWARD via
-    * [[recover]] instead of costing a rebuild. Also serves [[write]]/
-    * [[writeDistinct]]'s initial build, where no live generation may
-    * exist yet (the first rename is skipped). */
-  private def swapIn(spark: SparkSession, path: String, rows: DataFrame,
+  /** Swap `rows`, bucketed by `newBucketOf` as one consolidated
+    * generation, in as the store at `path` with the given meta —
+    * through a [[StagedSwap]] `_rebucketing` stage, because the output
+    * cannot overwrite the path its plan is still reading. Also serves
+    * the initial builds, where no live generation exists yet. */
+  private def restage(spark: SparkSession, path: String, rows: DataFrame,
       newBucketOf: Column, kind: String, layout: Int,
-      params: Seq[(String, String)]): Unit = {
-    val fs = fsFor(path, spark)
-    val tmp = path + "_rebucketing"
-    fs.delete(new HPath(tmp), true)
-    rows.withColumn("epoch", lit(-1L))
-      .withColumn("pbucket", newBucketOf)
-      .repartition(col("pbucket"))
-      .write.mode("overwrite").partitionBy("pbucket").parquet(tmp)
-    stampMeta(spark, tmp, kind, layout, params)
-    val old = new HPath(path + "_old")
-    if (fs.exists(new HPath(path))) fs.rename(new HPath(path), old)
-    fs.rename(new HPath(tmp), new HPath(path))
-    fs.delete(old, true)
-  }
+      params: Seq[(String, String)]): Unit =
+    StagedSwap.swap(fsFor(path, spark), path, StagedSwap.Rebucketing,
+        MetaFile, metaBody(kind, layout, params)) { tmp =>
+      rows.withColumn("epoch", lit(-1L))
+        .withColumn("pbucket", newBucketOf)
+        .repartition(col("pbucket"))
+        .write.mode("overwrite").partitionBy("pbucket").parquet(tmp)
+    }
 
-  /** Resolve the leftover state of an interrupted [[rebucket]] — the
-    * [[CcState.recover]] cases for the aggregate stores: live missing
-    * with a COMPLETE stage (its meta file written last) rolls FORWARD;
-    * live missing with only `_old` rolls back; stray `_old`/
-    * `_rebucketing` dirs beside a live store are dropped (an
-    * interrupted pre-swap stage — the rebucket simply never happened).
-    * Runs at the head of every MUTATING entry point; read paths call
-    * [[recoverIfMissing]] instead so a reader never deletes a live
-    * rebucket's stage (the CcState.labels read-safety rule). */
-  private def recover(spark: SparkSession, path: String): Unit = {
-    val fs = fsFor(path, spark)
-    recoverIfMissing(spark, path)
-    val old = new HPath(path + "_old")
-    val tmp = new HPath(path + "_rebucketing")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-  }
+  /** Writer-side [[StagedSwap.recover]]: runs at the head of every
+    * MUTATING entry point. */
+  private def recover(spark: SparkSession, path: String): Unit =
+    StagedSwap.recover(fsFor(path, spark), path, MetaFile)
 
-  /** The read-path half of [[recover]]: heal only when the live dir is
-    * actually missing (a crash inside the swap window), touch nothing
-    * otherwise. */
-  private def recoverIfMissing(spark: SparkSession, path: String): Unit = {
-    val fs = fsFor(path, spark)
-    val live = new HPath(path)
-    if (fs.exists(live)) return
-    val old = new HPath(path + "_old")
-    val tmp = new HPath(path + "_rebucketing")
-    if (fs.exists(new HPath(tmp, MetaFile))) {
-      fs.rename(tmp, live)
-      fs.delete(old, true)
-    } else if (fs.exists(old)) fs.rename(old, live)
-  }
+  /** Reader-side [[StagedSwap.healIfMissing]]: every read path. */
+  private def heal(spark: SparkSession, path: String): Unit =
+    StagedSwap.healIfMissing(fsFor(path, spark), path, MetaFile)
 
   /** Fold all layers back to one row per group, bucket by bucket (the
     * [[AnnIndex.compact]] moment: after many appendDelta epochs the
@@ -1216,7 +1159,7 @@ object AggState {
   def writeDistinct(base: DataFrame, groupCols: Seq[String],
       keyCol: String, k: Int, bucketOf: Column, path: String): Unit = {
     recover(base.sparkSession, path)
-    swapIn(base.sparkSession, path,
+    restage(base.sparkSession, path,
       distinctPartials(base, groupCols, keyCol, k), bucketOf,
       "distinct", DistinctLayout, distinctParams(k, bucketOf))
   }
@@ -1245,7 +1188,7 @@ object AggState {
   def refreshDistinct(spark: SparkSession, path: String, delta: DataFrame,
       groupCols: Seq[String], keyCol: String, k: Int,
       bucketOf: Column): DataFrame = {
-    recoverIfMissing(spark, path)
+    heal(spark, path)
     checkMeta(spark, path, "distinct", DistinctLayout,
       distinctParams(k, bucketOf): _*)
     val d = distinctPartials(delta, groupCols, keyCol, k)
@@ -1387,7 +1330,7 @@ object AggState {
   /** The current estimates over the whole sketch store. */
   def distinctEstimates(spark: SparkSession, path: String,
       groupCols: Seq[String], k: Int): DataFrame = {
-    recoverIfMissing(spark, path)
+    heal(spark, path)
     checkMeta(spark, path, "distinct", DistinctLayout, "k" -> k.toString)
     residentSketch(readStore(spark, path), groupCols, k)
       .select(groupCols.map(col) :+
@@ -1460,8 +1403,7 @@ object AggState {
     * null-partition directory, addressed by its literal name. */
   private def touchedDirs(spark: SparkSession, path: String,
       deltaPartials: DataFrame): Seq[String] = {
-    val fs = new HPath(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(path, spark)
     deltaPartials.select(col("pbucket")).distinct()
       .collect().map(r =>
         if (r.isNullAt(0)) "pbucket=__HIVE_DEFAULT_PARTITION__"

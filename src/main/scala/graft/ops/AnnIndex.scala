@@ -1,13 +1,13 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
+
+import graft.ops.StagedSwap.fsFor
 
 /** On-disk LSH-bucketed ANN index: the storage layout that makes
   * multi-probe ANN IO-PRUNED at scale instead of recomputed per query.
@@ -53,15 +53,10 @@ import org.apache.spark.sql.types.DataType
   * complete) but NOT during [[delete]]/[[compact]]/[[write]], whose
   * directory swaps have windows where a reader resolves a partial
   * layout — quiesce queries for those, the same operational rule as
-  * any non-MVCC store rewrite. CRASH SAFETY: every entry point first
-  * runs [[recover]], which detects the leftover state of an
-  * interrupted swap (`_old` / `_compacting` / `_deleting` + its
-  * bucket manifest) and either rolls the operation forward (staged
-  * replacement was complete) or back (it was not) — idempotently, so
-  * a crash during recovery itself is also recoverable. A completed
-  * [[delete]]'s staging manifest records per affected bucket whether
-  * it was rewritten or emptied, which is what makes redoing the
-  * per-bucket swap after a crash unambiguous.
+  * any non-MVCC store rewrite. CRASH SAFETY: [[compact]] and the
+  * rebuckets are [[StagedSwap]] whole-store swaps, [[delete]] is its
+  * manifest-driven partition swap, and every entry point — readers
+  * included — first runs [[recover]], that module's writer-side rule.
   *
   * Driver state: the probe-bucket collect is ≤ Q·(planes+1) short
   * strings — the parameter-bounded collect class (probe queries are
@@ -70,13 +65,6 @@ import org.apache.spark.sql.types.DataType
 object AnnIndex {
 
   private val MetaFile = "_graft_ann_meta"
-  /** Delete-staging manifest: one `<relative partition dir>,kept|emptied`
-    * line per affected partition (layout-agnostic: `bucket=b…`,
-    * `band=0/bucket=b…`, or `cell=c…`), written AFTER the staged data
-    * so its presence marks the stage complete. Underscore-prefixed:
-    * invisible to parquet readers if it ever survives into a data
-    * directory. */
-  private val AffectedFile = "_graft_affected"
 
   /** Bump on ANY change to the on-disk layout (partitioning, file
     * shape, stored columns) so stamped caches of built indexes (e.g.
@@ -106,29 +94,28 @@ object AnnIndex {
       if (banded) Seq("vec_id", "band") else Seq("vec_id")
     def layoutName: String =
       if (banded) "banded" else if (ivf) "IVF" else "flat"
+    /** The meta file body, one `key=value` line per field; the banded
+      * and IVF keys only for their layouts ([[readMeta]] defaults them,
+      * as it does for metas written before they existed). */
+    def render: String = StagedSwap.renderKv(Seq(
+        "planes" -> planes.toString, "dims" -> dims.toString,
+        "centered" -> centered.toString, "quantized" -> quantized.toString,
+        "mu" -> mu.map(java.lang.Double.toString).mkString(","),
+        "vecIdType" -> vecIdType) ++
+      (if (banded) Seq("bands" -> bands.toString,
+        "planesPerBand" -> planesPerBand.toString) else Nil) ++
+      (if (ivf) Seq("centIds" -> centIds.mkString(","),
+        "centroids" -> centroids.map(_.map(java.lang.Double.toString)
+          .mkString(",")).mkString(";")) else Nil))
   }
 
-  // ------------------------------------------------------------------
-  // Hadoop-FS plumbing: ALL small-file IO rides the same FileSystem as
-  // the parquet data, so path schemes like hdfs:// work end to end.
-  // ------------------------------------------------------------------
-  private def fsFor(path: String, spark: SparkSession): FileSystem =
-    new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeString(fs: FileSystem, p: HPath, body: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
-
-  private def readString(fs: FileSystem, p: HPath): String = {
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
+  /** The unstaged initial build shared by the three writers: the
+    * corpus in `meta`'s storage encoding, then the meta file. */
+  private def build(corpus: DataFrame, path: String, meta: Meta): Unit = {
+    encodeRows(corpus, meta)
+      .write.mode("overwrite").partitionBy(meta.partCols: _*).parquet(path)
+    StagedSwap.writeString(fsFor(path, corpus.sparkSession),
+      new HPath(path, MetaFile), meta.render)
   }
 
   /** The max-abs int8 storage columns (`code`, `qscale`) for the
@@ -185,14 +172,8 @@ object AnnIndex {
     // exact-integer range and turning every bucket comparison into an
     // implicit cast. A non-numeric first char keeps the partition
     // column a string end to end.
-    indexRows(corpus, planes, dims, mu, quantized)
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    val muStr = mu.map(java.lang.Double.toString).mkString(",")
-    val vecIdType = corpus.schema("vec_id").dataType.catalogString
-    val body = s"planes=$planes\ndims=$dims\ncentered=$centered\n" +
-      s"quantized=$quantized\nmu=$muStr\nvecIdType=$vecIdType\n"
-    writeString(fsFor(path, corpus.sparkSession),
-      new HPath(path, MetaFile), body)
+    build(corpus, path, Meta(planes, dims, centered, mu, quantized,
+      corpus.schema("vec_id").dataType.catalogString))
   }
 
   /** Banded (OR-construction) persisted index: `bands` independent
@@ -223,15 +204,9 @@ object AnnIndex {
     // most — each of the `bands` copies shrinks 4-8×. Buckets are
     // computed from the ORIGINAL floats ([[write]]'s rule), codes
     // reconstruct inside the probe scan's projection.
-    bandedRows(corpus, bands, planesPerBand, dims, mu, quantized)
-      .write.mode("overwrite").partitionBy("band", "bucket").parquet(path)
-    val muStr = mu.map(java.lang.Double.toString).mkString(",")
-    val vecIdType = corpus.schema("vec_id").dataType.catalogString
-    val body = s"planes=${bands * planesPerBand}\ndims=$dims\n" +
-      s"centered=$centered\nquantized=$quantized\nmu=$muStr\n" +
-      s"vecIdType=$vecIdType\nbands=$bands\nplanesPerBand=$planesPerBand\n"
-    writeString(fsFor(path, corpus.sparkSession),
-      new HPath(path, MetaFile), body)
+    build(corpus, path, Meta(bands * planesPerBand, dims, centered, mu,
+      quantized, corpus.schema("vec_id").dataType.catalogString,
+      bands, planesPerBand))
   }
 
   /** The banded layout's stored rows — one copy per band under
@@ -356,20 +331,12 @@ object AnnIndex {
       .select(col("vec_id").cast("long"),
         Similarity.toDouble(col("embedding")).as("c"))
       .collect().sortBy(_.getLong(0))
-    val ids = centRows.map(_.getLong(0)).toSeq
-    val cvecs = centRows.map(_.getSeq[Double](1)).toSeq
-    ivfRows(corpus, ids, cvecs, quantized)
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-    val vecIdType = corpus.schema("vec_id").dataType.catalogString
     // centroid doubles round-trip via Double.toString/parseDouble
     // (exact), so an IVF append assigns with bit-identical centroids
-    val body = s"planes=0\ndims=$dims\ncentered=false\nquantized=$quantized\n" +
-      s"mu=\nvecIdType=$vecIdType\n" +
-      s"centIds=${ids.mkString(",")}\n" +
-      s"centroids=${cvecs.map(_.map(java.lang.Double.toString)
-        .mkString(",")).mkString(";")}\n"
-    writeString(fsFor(path, corpus.sparkSession),
-      new HPath(path, MetaFile), body)
+    build(corpus, path, Meta(0, dims, centered = false, Seq.empty,
+      quantized, corpus.schema("vec_id").dataType.catalogString,
+      centIds = centRows.map(_.getLong(0)).toSeq,
+      centroids = centRows.map(_.getSeq[Double](1)).toSeq))
   }
 
   /** The stored row for one IVF-indexed vector: cell partition key
@@ -522,13 +489,10 @@ object AnnIndex {
     * (≤ |deletes| short strings, same class as the probe collect).
     * Buckets left empty by the delete are removed entirely.
     *
-    * Crash shape: the rewritten buckets are STAGED under
-    * `path + "_deleting"`, a manifest recording each affected bucket's
-    * fate is written after the data, and only then are buckets swapped
-    * in one by one. A crash anywhere leaves state [[recover]] resolves
-    * on the next call (stage incomplete → discard; stage complete →
-    * redo the swap, which is idempotent). Readers must be quiesced for
-    * the swap window — see the object-level contract. */
+    * Crash shape: the rewritten buckets go through the
+    * [[StagedSwap]] partition swap — entries are the RELATIVE
+    * partition dirs, so one protocol serves all three layouts. Readers
+    * must be quiesced for the swap window (object-level contract). */
   def delete(spark: SparkSession, deletes: DataFrame, path: String): Unit = {
     recover(spark, path)
     val meta = readMeta(path)
@@ -539,91 +503,41 @@ object AnnIndex {
       .filter(d => fs.exists(new HPath(path, d)))
     if (affected.isEmpty) return
     val dirs = affected.map(d => s"$path/$d")
-    val tmp = path + "_deleting"
-    spark.read.option("basePath", path).parquet(dirs: _*)
-      .join(broadcast(keyed.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_anti")
-      .repartition(meta.partCols.map(col): _*)
-      .write.mode("overwrite").partitionBy(meta.partCols: _*).parquet(tmp)
-    // manifest AFTER the staged data: presence = stage complete. A
-    // partition with no staged dir was emptied by the delete — recorded
-    // explicitly, because after a partial swap "no staged dir" is
-    // otherwise ambiguous between "emptied" and "already swapped".
-    // Entries are the RELATIVE partition dirs (`bucket=b…`,
-    // `band=0/bucket=b…`, `cell=c…`) — layout-agnostic, so one swap
-    // protocol serves all three layouts.
-    val manifest = affected.map { d =>
-      val kept = fs.exists(new HPath(tmp, d))
-      s"$d,${if (kept) "kept" else "emptied"}"
-    }.mkString("\n")
-    writeString(fs, new HPath(tmp, AffectedFile), manifest)
-    applyDeleteSwap(fs, path, tmp)
-    fs.delete(new HPath(tmp), true)
-  }
-
-  /** Swap staged delete results into the live layout, partition by
-    * partition, driven by the staging manifest (relative partition
-    * dirs). Idempotent: a "kept" dir whose staged copy is gone was
-    * already swapped (skip); an "emptied" dir's live delete is a no-op
-    * the second time — so [[recover]] can re-run this verbatim after a
-    * crash at any point, including mid-partition (live dir deleted,
-    * rename pending). */
-  private def applyDeleteSwap(fs: FileSystem, path: String,
-      tmp: String): Unit = {
-    readString(fs, new HPath(tmp, AffectedFile)).linesIterator
-      .filter(_.nonEmpty).foreach { line =>
-        val i = line.lastIndexOf(',')
-        val (d, status) = (line.substring(0, i), line.substring(i + 1))
-        val live = new HPath(path, d)
-        val staged = new HPath(tmp, d)
-        if (status == "kept") {
-          if (fs.exists(staged)) {
-            fs.delete(live, true)
-            // nested layouts (band=B/bucket=K): rename needs the live
-            // parent dir present — it can be missing after a crash if
-            // this was the band's only surviving bucket
-            fs.mkdirs(live.getParent)
-            fs.rename(staged, live)
-          } // staged dir gone = this partition already swapped
-        } else fs.delete(live, true) // emptied: idempotent remove
-      }
+    StagedSwap.swapPartitions(fs, path, affected) { tmp =>
+      spark.read.option("basePath", path).parquet(dirs: _*)
+        .join(broadcast(keyed.select(col("vec_id")).distinct()),
+          Seq("vec_id"), "left_anti")
+        .repartition(meta.partCols.map(col): _*)
+        .write.mode("overwrite").partitionBy(meta.partCols: _*).parquet(tmp)
+    }
   }
 
   /** Rewrite the index so each bucket is ONE file again: every
     * [[append]] (or stream epoch) adds a file generation per touched
     * bucket, and after many epochs the probe read's cost shifts from
     * rows to file-open overhead. Compaction re-co-locates the buckets
-    * (the same repartition-by-bucket the writer uses) into a staged
-    * sibling directory — metadata copied in LAST, so its presence
-    * marks the stage complete — then swaps it in with two renames
-    * (live → `_old`, staged → live) and drops `_old`. Each rename is
-    * atomic on HDFS-like filesystems but the PAIR is not: a crash
-    * between them leaves no live directory, which [[recover]] rolls
-    * forward (staged replacement complete) on the next call; readers
-    * must be quiesced for the swap window (object-level contract).
-    * Bucketing statistics are copied verbatim — compaction must never
-    * re-derive μ. */
+    * (the same repartition-by-bucket the writer uses) and swaps the
+    * result in through a [[StagedSwap]] whole-store swap, with the
+    * meta file copied into the stage VERBATIM as its marker —
+    * compaction must never re-derive μ. Readers must be quiesced for
+    * the swap window (object-level contract). */
   def compact(spark: SparkSession, path: String): Unit = {
     recover(spark, path)
     val meta = readMeta(path)
     val fs = fsFor(path, spark)
-    val tmp = path + "_compacting"
-    // dropDuplicates(meta.dedupKey): an at-least-once appendStream
-    // redelivery leaves identical duplicate rows (same id ⇒ same
-    // vector by contract); compaction is where their cost is
-    // physically removed. The rewrite preserves the layout's OWN
-    // partition columns — a banded store keeps its band= level, an IVF
-    // store its cell= dirs.
-    spark.read.parquet(path)
-      .dropDuplicates(meta.dedupKey)
-      .repartition(meta.partCols.map(col): _*)
-      .write.mode("overwrite").partitionBy(meta.partCols: _*).parquet(tmp)
-    writeString(fs, new HPath(tmp, MetaFile),
-      readString(fs, new HPath(path, MetaFile)))
-    val old = new HPath(path + "_old")
-    fs.rename(new HPath(path), old)
-    fs.rename(new HPath(tmp), new HPath(path))
-    fs.delete(old, true)
+    val body = StagedSwap.readString(fs, new HPath(path, MetaFile))
+    StagedSwap.swap(fs, path, StagedSwap.Compacting, MetaFile, body) { tmp =>
+      // dropDuplicates(meta.dedupKey): an at-least-once appendStream
+      // redelivery leaves identical duplicate rows (same id ⇒ same
+      // vector by contract); compaction is where their cost is
+      // physically removed. The rewrite preserves the layout's OWN
+      // partition columns — a banded store keeps its band= level, an
+      // IVF store its cell= dirs.
+      spark.read.parquet(path)
+        .dropDuplicates(meta.dedupKey)
+        .repartition(meta.partCols.map(col): _*)
+        .write.mode("overwrite").partitionBy(meta.partCols: _*).parquet(tmp)
+    }
   }
 
   // ------------------------------------------------------------------
@@ -635,11 +549,9 @@ object AnnIndex {
   // only path was a caller-side from-scratch rewrite FROM THE CORPUS.
   // rebucket instead re-derives the new layout from the STORED vectors
   // (one full read of the index — the compact cost class, scheduled,
-  // never a tax on daily appends) and swaps it in with the staged
-  // protocol every store here shares: stage beside the live dir, new
-  // meta written into the stage LAST (= stage-complete marker), two
-  // renames, [[recover]] rolling a swap-window crash FORWARD and
-  // discarding an incomplete stage. Quantized layouts re-hash (and
+  // never a tax on daily appends) and swaps it in through the
+  // [[StagedSwap]] whole-store swap, the new meta as the stage's
+  // marker ([[migrate]]). Quantized layouts re-hash (and
   // re-train) from the int8 RECONSTRUCTION — the store deliberately
   // does not keep the raw floats, so the migrated geometry is the
   // geometry of the reconstructed corpus (q203 measured the
@@ -668,21 +580,15 @@ object AnnIndex {
           .as("embedding"))
       .dropDuplicates("vec_id")
 
-  /** Stage `rows` (already encoded + repartitioned for the layout) and
-    * swap them in under the new meta `body` — see the migration block
-    * comment for the crash contract. */
-  private def swapInStage(spark: SparkSession, path: String,
-      rows: DataFrame, partCols: Seq[String], body: String): Unit = {
-    val fs = fsFor(path, spark)
-    val tmp = path + "_rebucketing"
-    fs.delete(new HPath(tmp), true)
-    rows.write.mode("overwrite").partitionBy(partCols: _*).parquet(tmp)
-    writeString(fs, new HPath(tmp, MetaFile), body)
-    val old = new HPath(path + "_old")
-    fs.rename(new HPath(path), old)
-    fs.rename(new HPath(tmp), new HPath(path))
-    fs.delete(old, true)
-  }
+  /** Re-encode `corpus` under the migrated `next` meta into a
+    * `_rebucketing` stage and swap it in. */
+  private def migrate(spark: SparkSession, path: String, corpus: DataFrame,
+      next: Meta): Unit =
+    StagedSwap.swap(fsFor(path, spark), path, StagedSwap.Rebucketing,
+        MetaFile, next.render) { tmp =>
+      encodeRows(corpus, next)
+        .write.mode("overwrite").partitionBy(next.partCols: _*).parquet(tmp)
+    }
 
   /** Re-plane a FLAT index to `newPlanes` hyperplanes: every stored
     * vector is re-hashed (with a fresh corpus mean when the index is
@@ -703,13 +609,7 @@ object AnnIndex {
     val corpus = residentCorpus(spark, path, meta)
     val mu = if (meta.centered) Similarity.dimMeans(corpus, meta.dims)
       else Seq.empty[Double]
-    val muStr = mu.map(java.lang.Double.toString).mkString(",")
-    val body = s"planes=$newPlanes\ndims=${meta.dims}\n" +
-      s"centered=${meta.centered}\nquantized=${meta.quantized}\n" +
-      s"mu=$muStr\nvecIdType=${meta.vecIdType}\n"
-    swapInStage(spark, path,
-      indexRows(corpus, newPlanes, meta.dims, mu, meta.quantized),
-      Seq("bucket"), body)
+    migrate(spark, path, corpus, meta.copy(planes = newPlanes, mu = mu))
   }
 
   /** [[rebucket]] for the banded layout: each stored vector (ONE
@@ -729,16 +629,9 @@ object AnnIndex {
     val corpus = residentCorpus(spark, path, meta)
     val mu = if (meta.centered) Similarity.dimMeans(corpus, meta.dims)
       else Seq.empty[Double]
-    val muStr = mu.map(java.lang.Double.toString).mkString(",")
-    val body = s"planes=${newBands * newPlanesPerBand}\n" +
-      s"dims=${meta.dims}\ncentered=${meta.centered}\n" +
-      s"quantized=${meta.quantized}\nmu=$muStr\n" +
-      s"vecIdType=${meta.vecIdType}\nbands=$newBands\n" +
-      s"planesPerBand=$newPlanesPerBand\n"
-    swapInStage(spark, path,
-      bandedRows(corpus, newBands, newPlanesPerBand, meta.dims, mu,
-        meta.quantized),
-      Seq("band", "bucket"), body)
+    migrate(spark, path, corpus, meta.copy(
+      planes = newBands * newPlanesPerBand, mu = mu, bands = newBands,
+      planesPerBand = newPlanesPerBand))
   }
 
   /** [[rebucket]] for the IVF layout: RE-TRAINS the coarse quantizer
@@ -765,16 +658,10 @@ object AnnIndex {
       .select(col("vec_id").cast("long"),
         Similarity.toDouble(col("embedding")).as("c"))
       .collect().sortBy(_.getLong(0))
-    val ids = centRows.map(_.getLong(0)).toSeq
-    val cvecs = centRows.map(_.getSeq[Double](1)).toSeq
-    val body = s"planes=0\ndims=${meta.dims}\ncentered=false\n" +
-      s"quantized=${meta.quantized}\nmu=\n" +
-      s"vecIdType=${meta.vecIdType}\n" +
-      s"centIds=${ids.mkString(",")}\n" +
-      s"centroids=${cvecs.map(_.map(java.lang.Double.toString)
-        .mkString(",")).mkString(";")}\n"
-    swapInStage(spark, path, ivfRows(corpus, ids, cvecs, meta.quantized),
-      Seq("cell"), body)
+    migrate(spark, path, corpus, Meta(0, meta.dims, centered = false,
+      Seq.empty, meta.quantized, meta.vecIdType,
+      centIds = centRows.map(_.getLong(0)).toSeq,
+      centroids = centRows.map(_.getSeq[Double](1)).toSeq))
   }
 
   /** The class-doc budget as code: planes ≈ log₂(n / targetBucketSize),
@@ -832,51 +719,10 @@ object AnnIndex {
   }
 
   /** Resolve the leftover state of an interrupted [[compact]],
-    * [[delete]], or rebucket so every caller sees a complete layout.
-    * Runs automatically at the head of every entry point; idempotent,
-    * so a crash during recovery is itself recoverable. Cases:
-    *  - live dir missing + `_old` present: a compact or rebucket
-    *    crashed between its two renames. If the staged `_compacting` /
-    *    `_rebucketing` dir is COMPLETE (has its meta file) the
-    *    operation rolls FORWARD (staged → live); otherwise `_old`
-    *    rolls back to live.
-    *  - `_old` present alongside live: the swap finished but the final
-    *    cleanup didn't — drop `_old`.
-    *  - `_compacting` / `_rebucketing` present: the stage never
-    *    swapped (crash before the first rename, or rolled back above)
-    *    — discard it; the operation simply "didn't happen".
-    *  - `_deleting` present WITH its manifest: the staged delete was
-    *    complete — redo the (idempotent) bucket swap, then discard the
-    *    stage. Without the manifest the stage was incomplete — discard
-    *    it; the delete "didn't happen".
-    */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val fs = fsFor(path, spark)
-    val live = new HPath(path)
-    val old = new HPath(path + "_old")
-    val compacting = new HPath(path + "_compacting")
-    val rebucketing = new HPath(path + "_rebucketing")
-    val deleting = new HPath(path + "_deleting")
-    if (!fs.exists(live) && fs.exists(old)) {
-      if (fs.exists(new HPath(compacting, MetaFile))) {
-        fs.rename(compacting, live) // roll forward: stage was complete
-        fs.delete(old, true)
-      } else if (fs.exists(new HPath(rebucketing, MetaFile))) {
-        fs.rename(rebucketing, live) // roll forward: stage was complete
-        fs.delete(old, true)
-      } else {
-        fs.rename(old, live) // roll back
-      }
-    }
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(compacting)) fs.delete(compacting, true)
-    if (fs.exists(rebucketing)) fs.delete(rebucketing, true)
-    if (fs.exists(deleting)) {
-      if (fs.exists(new HPath(deleting, AffectedFile)))
-        applyDeleteSwap(fs, path, path + "_deleting")
-      fs.delete(deleting, true)
-    }
-  }
+    * [[delete]], or rebucket so every caller sees a complete layout —
+    * [[StagedSwap.recover]], run at the head of every entry point. */
+  def recover(spark: SparkSession, path: String): Unit =
+    StagedSwap.recover(fsFor(path, spark), path, MetaFile)
 
   /** Maintain the index from a STREAM of (vec_id, embedding) rows:
     * each micro-batch rides [[append]] — bucketed with the index's
@@ -902,12 +748,8 @@ object AnnIndex {
     * written before `vecIdType` existed read back as bigint — the only
     * vec_id type those layouts ever stored. */
   def readMeta(path: String): Meta = {
-    val spark = SparkSession.active
-    val fs = fsFor(path, spark)
-    val kv = readString(fs, new HPath(path, MetaFile))
-      .linesIterator.filter(_.contains("=")).map { l =>
-        val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
-      }.toMap
+    val kv = StagedSwap.readKv(fsFor(path, SparkSession.active),
+      new HPath(path, MetaFile))
     Meta(kv("planes").toInt, kv("dims").toInt, kv("centered").toBoolean,
       if (kv("mu").isEmpty) Seq.empty
       else kv("mu").split(",").toSeq.map(java.lang.Double.parseDouble),

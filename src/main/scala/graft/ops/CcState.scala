@@ -1,11 +1,11 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.{Path => HPath}
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ops.StagedSwap.fsFor
 
 /** Persisted connected-components state: incremental maintenance of the
   * near-dup CLUSTERING itself — the last recompute in the daily dedup
@@ -70,11 +70,11 @@ import org.apache.spark.sql.functions._
   * the same way: a crash after the rewrite but before the log delete
   * leaves merge records whose sources no longer appear in any base row
   * — resolving them is a no-op. SINGLE WRITER, as every persisted
-  * store here: one absorb/compact at a time per path — and READERS
-  * must be quiesced across [[compact]]'s two-rename swap window (the
-  * [[AnnIndex]] contract): a [[labels]] call racing the swap can
-  * observe the live dir missing and roll the staged state forward
-  * under the writer.
+  * store here: one absorb/compact at a time per path. [[compact]],
+  * [[rebucket]] and [[compactEdges]] are [[StagedSwap]] whole-store
+  * swaps, [[deleteNodes]] its partition swap; writers run
+  * [[recover]] first, [[labels]] only heals a missing live dir — and
+  * READERS must be quiesced across the swap window.
   *
   * Merge-log growth: the log is collected driver-side on every read
   * ([[mergeMap]]) — bounded by cluster-merge events since the last
@@ -88,39 +88,29 @@ import org.apache.spark.sql.functions._
 object CcState {
 
   private val MetaFile = "_graft_cc_meta"
-  /** [[deleteNodes]]' staging manifest — the [[AnnIndex]] delete-swap
-    * discipline: one `pbucket=N,kept|emptied` line per affected label
-    * bucket plus one `log,kept|emptied` line for the merge log,
-    * written AFTER the staged data so its presence marks the stage
-    * complete. */
-  private val AffectedFile = "_graft_affected"
-  /** The purged merge log inside a [[deleteNodes]] stage. */
-  private val StagedLogDir = "_newlog"
-
-  private def fsFor(path: String, spark: SparkSession): FileSystem =
-    new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def mergesPath(path: String): String = path + "_merges"
 
-  private def writeString(fs: FileSystem, p: HPath, body: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  /** The purged merge log inside a [[deleteNodes]] stage. */
+  private val StagedLogDir = "_newlog"
 
-  private def readString(fs: FileSystem, p: HPath): String = {
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-  }
+  /** [[deleteNodes]]' partition-swap entry for the merge log: the
+    * manifest's `log` line swaps the staged log to `<path>_merges`. */
+  private def logSidecar(path: String) =
+    Map("log" -> StagedSwap.Sidecar(StagedLogDir, mergesPath(path)))
+
+  private def metaBody(buckets: Int): String =
+    StagedSwap.renderKv(Seq("buckets" -> buckets.toString))
 
   private def bucketCol(buckets: Int) =
     pmod(hash(col("node")), lit(buckets)).as("pbucket")
+
+  /** `rows` (a `node` column) under the node-hash bucket layout, one
+    * file per bucket — the writer every label and edge write shares. */
+  private def bucketed(rows: DataFrame, buckets: Int): DataFrameWriter[Row] =
+    rows.withColumn("pbucket", bucketCol(buckets))
+      .repartition(col("pbucket"))
+      .write.partitionBy("pbucket")
 
   /** Build the state from scratch: CC over `pairs` (id_a, id_b),
     * labels written partitioned by the node-hash bucket, one file per
@@ -139,32 +129,17 @@ object CcState {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val spark = pairs.sparkSession
     recover(spark, path)
-    Dedup.connectedComponents(pairs)
-      .withColumn("pbucket", bucketCol(buckets))
-      .repartition(col("pbucket"))
-      .write.mode("overwrite").partitionBy("pbucket").parquet(path)
+    bucketed(Dedup.connectedComponents(pairs), buckets)
+      .mode("overwrite").parquet(path)
     val fs = fsFor(path, spark)
-    val out = fs.create(new HPath(path, MetaFile), true)
-    try out.write(s"buckets=$buckets\n".getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    StagedSwap.writeString(fs, new HPath(path, MetaFile), metaBody(buckets))
     fs.delete(new HPath(mergesPath(path)), true) // fresh state, no log
   }
 
-  private def readBuckets(spark: SparkSession, path: String): Int = {
-    val fs = fsFor(path, spark)
-    val in = fs.open(new HPath(path, MetaFile))
-    val body =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](256)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
-    body.linesIterator.collectFirst {
-      case l if l.startsWith("buckets=") => l.stripPrefix("buckets=").toInt
-    }.getOrElse(sys.error(s"$path/$MetaFile has no buckets entry"))
-  }
+  private def readBuckets(spark: SparkSession, path: String): Int =
+    StagedSwap.readKv(fsFor(path, spark), new HPath(path, MetaFile))
+      .get("buckets").map(_.toInt)
+      .getOrElse(sys.error(s"$path/$MetaFile has no buckets entry"))
 
   /** The merge log as a path-compressed driver map: old label → final
     * label. Bounded by cluster-merge events since the last [[compact]]
@@ -298,23 +273,19 @@ object CcState {
           // it is its own cluster then
           .select(col("node"), coalesce(col("cluster"), col("node"))
             .as("cluster"))
-        val toAppend = newNodes.withColumn("pbucket", bucketCol(buckets))
-        if (!toAppend.isEmpty)
-          toAppend.repartition(col("pbucket"))
-            .write.mode("append").partitionBy("pbucket").parquet(path)
+        if (!newNodes.isEmpty)
+          bucketed(newNodes, buckets).mode("append").parquet(path)
       } finally merged.unpersist()
     } finally resident.unpersist()
   }
 
   /** The current clustering: every base row's label resolved through
     * the merge log. Full-store read — the VIEW, not the probe path.
-    * Read-only: crash recovery runs ONLY when the live dir is missing
-    * (an interrupted compact's swap window) — recover()'s stray-dir
-    * cleanup would otherwise delete a concurrent compact's live
-    * `_compacting` stage. Readers must still be quiesced across the
-    * swap window itself (the object doc's contract). */
+    * Read-only: it runs [[StagedSwap.healIfMissing]], never the full
+    * [[recover]], whose stray-dir cleanup would delete a concurrent
+    * compact's live `_compacting` stage. */
   def labels(spark: SparkSession, path: String): DataFrame = {
-    if (!fsFor(path, spark).exists(new HPath(path))) recover(spark, path)
+    StagedSwap.healIfMissing(fsFor(path, spark), path, MetaFile)
     applyMerges(
       spark.read.parquet(path).select(col("node"), col("cluster")),
       "cluster", mergeMap(spark, path))
@@ -359,12 +330,10 @@ object CcState {
 
   /** Fold the merge log into the base (full rewrite, scheduled — the
     * amortization every persisted store here shares) and clear it. The
-    * rewrite STAGES to a sibling directory with the meta file copied
-    * in LAST (= stage-complete marker), then swaps with two renames —
-    * the [[AnnIndex.compact]] protocol, because unlike the band index
-    * this state is NOT cheaply rebuildable (it summarizes every edge
-    * ever absorbed), so a crash between the renames must roll FORWARD
-    * via [[recover]], never cost a rebuild. Idempotent tail: a crash
+    * rewrite is a [[StagedSwap]] whole-store swap, because unlike the
+    * band index this state is NOT cheaply rebuildable (it summarizes
+    * every edge ever absorbed), so a swap-window crash must roll
+    * FORWARD via [[recover]], never cost a rebuild. Idempotent tail: a crash
     * after the swap but before the log delete leaves merge records
     * whose sources no longer label any base row — resolving is a
     * no-op — and the next compact clears them. */
@@ -376,9 +345,8 @@ object CcState {
     * [[write]] (the sizing budget in the class doc: buckets ≈
     * corpus / targetBucketRows — a store that grew 30× under absorbs
     * has 30× the rows per bucket, and every probe pays it). A rebucket
-    * IS a compact into the new geometry: same staged write + meta-last
-    * + two-rename swap + roll-forward [[recover]], with the merge log
-    * folded in on the way; `buckets` in the meta is updated, so every
+    * IS a compact into the new geometry, with the merge log folded in
+    * on the way; `buckets` in the meta is updated, so every
     * later absorb prunes with the new hash. Runs on the compact
     * schedule (full rewrite — the amortization argument). */
   def rebucket(spark: SparkSession, path: String, newBuckets: Int): Unit = {
@@ -416,22 +384,18 @@ object CcState {
 
   private def compactTo(spark: SparkSession, path: String,
       buckets: Int): Unit = {
-    val fs = fsFor(path, spark)
-    val tmp = path + "_compacting"
-    fs.delete(new HPath(tmp), true)
-    labels(spark, path)
-      .withColumn("pbucket", bucketCol(buckets))
-      .repartition(col("pbucket"))
-      .write.mode("overwrite").partitionBy("pbucket").parquet(tmp)
-    val out = fs.create(new HPath(tmp, MetaFile), true)
-    try out.write(s"buckets=$buckets\n".getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val old = new HPath(path + "_old")
-    fs.rename(new HPath(path), old)
-    fs.rename(new HPath(tmp), new HPath(path))
-    fs.delete(old, true)
-    fs.delete(new HPath(mergesPath(path)), true)
+    restage(spark, path, labels(spark, path), buckets)
+    fsFor(path, spark).delete(new HPath(mergesPath(path)), true)
   }
+
+  /** Swap `rows` in as the store at `path`, bucketed by `buckets`,
+    * through a `_compacting` stage. */
+  private def restage(spark: SparkSession, path: String, rows: DataFrame,
+      buckets: Int): Unit =
+    StagedSwap.swap(fsFor(path, spark), path, StagedSwap.Compacting,
+        MetaFile, metaBody(buckets)) { tmp =>
+      bucketed(rows, buckets).mode("overwrite").parquet(tmp)
+    }
 
   // ==================================================================
   // Edge-retention mode: the optional persisted EDGE store (the truth
@@ -456,14 +420,12 @@ object CcState {
     recover(spark, path)
     val e = pairs.filter(col("id_a").isNotNull && col("id_b").isNotNull)
       .select(col("id_a"), col("id_b")).distinct()
-    e.select(col("id_a").as("node"), col("id_b").as("peer"))
+    val both = e.select(col("id_a").as("node"), col("id_b").as("peer"))
       .unionByName(e.select(col("id_b").as("node"), col("id_a").as("peer")))
       .distinct()
-      .withColumn("pbucket", bucketCol(buckets))
-      .repartition(col("pbucket"))
-      .write.mode("overwrite").partitionBy("pbucket").parquet(path)
-    writeString(fsFor(path, spark), new HPath(path, MetaFile),
-      s"buckets=$buckets\n")
+    bucketed(both, buckets).mode("overwrite").parquet(path)
+    StagedSwap.writeString(fsFor(path, spark), new HPath(path, MetaFile),
+      metaBody(buckets))
   }
 
   /** Append a day's new edges into the edge store — both directions,
@@ -484,36 +446,22 @@ object CcState {
     }
     val e = newEdges.filter(col("id_a").isNotNull && col("id_b").isNotNull)
       .select(col("id_a"), col("id_b")).distinct()
-    e.select(col("id_a").as("node"), col("id_b").as("peer"))
+    val both = e.select(col("id_a").as("node"), col("id_b").as("peer"))
       .unionByName(e.select(col("id_b").as("node"), col("id_a").as("peer")))
       .distinct()
-      .withColumn("pbucket", bucketCol(buckets))
-      .repartition(col("pbucket"))
-      .write.mode("append").partitionBy("pbucket").parquet(path)
+    bucketed(both, buckets).mode("append").parquet(path)
   }
 
   /** Fold redelivery duplicates out of the edge store — the scheduled
     * physical purge ([[compact]]'s role for the adjacency rows): a
-    * staged distinct rewrite with the meta written LAST and the
-    * two-rename swap, so [[recover]] rolls a swap-window crash
-    * FORWARD. Runs on the compact schedule; reads are correct without
-    * it (every consumer distincts), it only removes their cost. */
+    * staged distinct rewrite swapped in like [[compact]]'s. Runs on
+    * the compact schedule; reads are correct without it (every
+    * consumer distincts), it only removes their cost. */
   def compactEdges(spark: SparkSession, path: String): Unit = {
     recover(spark, path)
-    val buckets = readBuckets(spark, path)
-    val fs = fsFor(path, spark)
-    val tmp = path + "_compacting"
-    fs.delete(new HPath(tmp), true)
-    spark.read.parquet(path)
-      .select(col("node"), col("peer")).distinct()
-      .withColumn("pbucket", bucketCol(buckets))
-      .repartition(col("pbucket"))
-      .write.mode("overwrite").partitionBy("pbucket").parquet(tmp)
-    writeString(fs, new HPath(tmp, MetaFile), s"buckets=$buckets\n")
-    val old = new HPath(path + "_old")
-    fs.rename(new HPath(path), old)
-    fs.rename(new HPath(tmp), new HPath(path))
-    fs.delete(old, true)
+    restage(spark, path,
+      spark.read.parquet(path).select(col("node"), col("peer")).distinct(),
+      readBuckets(spark, path))
   }
 
   /** Redelivery-duplicate rows resident in the edge store — the
@@ -576,9 +524,8 @@ object CcState {
     * — their only rows touched deleted nodes); (5) re-run CC over the
     * surviving component edges, members who lost every edge becoming
     * singletons; (6) swap the rewritten label buckets AND the purged
-    * merge log in via an [[AnnIndex.delete]]-style staged manifest
-    * (stage complete = manifest present; [[recover]] redoes the
-    * idempotent swap after a crash). The merge-log purge drops every
+    * merge log in through one [[StagedSwap]] partition swap
+    * ([[recover]] redoes it after a crash). The merge-log purge drops every
     * record resolving into the affected cluster set — after the
     * rebuild no live row resolves through them, and a SURVIVOR can
     * legitimately become a new cluster label that collides with a
@@ -687,123 +634,52 @@ object CcState {
             } finally kept.unpersist()
           }
           // (6) staged label-bucket + merge-log swap
-          stageLabelDelete(spark, labelPath, lBuckets, comp, newLabels,
+          swapLabelDelete(spark, labelPath, lBuckets, comp, newLabels,
             m, cSet)
-          applyLabelDeleteSwap(fsFor(labelPath, spark), labelPath)
-          fsFor(labelPath, spark)
-            .delete(new HPath(labelPath + "_deleting"), true)
         } finally surviving.unpersist()
       } finally comp.unpersist()
     } finally del.unpersist()
   }
 
-  /** Build [[deleteNodes]]' stage: the affected label buckets
+  /** [[deleteNodes]]' partition swap: the affected label buckets
     * rewritten (component rows replaced by `newLabels`, deleted ids
-    * dropped, other components' rows passed through), the purged merge
-    * log, and LAST the manifest. */
-  private def stageLabelDelete(spark: SparkSession, labelPath: String,
+    * dropped, other components' rows passed through) plus the purged
+    * merge log, swapped in through [[StagedSwap.swapPartitions]]. */
+  private def swapLabelDelete(spark: SparkSession, labelPath: String,
       buckets: Int, comp: DataFrame, newLabels: DataFrame,
       m: Map[Any, Any], cSet: Seq[Any]): Unit = {
-    val fs = fsFor(labelPath, spark)
-    val tmp = labelPath + "_deleting"
-    fs.delete(new HPath(tmp), true)
     val lDirs = touchedDirs(spark, labelPath, comp, buckets)
-    val keep = spark.read.option("basePath", labelPath).parquet(lDirs: _*)
-      .select(col("node"), col("cluster"))
-      .join(comp, Seq("node"), "left_anti")
-    keep.unionByName(newLabels)
-      .withColumn("pbucket", bucketCol(buckets))
-      .repartition(col("pbucket"))
-      .write.mode("overwrite").partitionBy("pbucket").parquet(tmp)
-    // purged merge log: drop every record resolving into the affected
-    // clusters (driver-sized — the mergeMap collect class); writing
-    // the path-compressed form is semantically identical to the raw
-    // chains it replaces
-    val keptLog = m.toSeq.filterNot { case (_, fin) => cSet.contains(fin) }
-    val logKept = keptLog.nonEmpty
-    if (logKept) {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("old_cluster",
-          newLabels.schema("cluster").dataType),
-        org.apache.spark.sql.types.StructField("new_cluster",
-          newLabels.schema("cluster").dataType)))
-      val rows = keptLog.map { case (o, n) =>
-        org.apache.spark.sql.Row(o, n)
+    val entries = lDirs.map(d => d.substring(d.lastIndexOf('/') + 1)) :+ "log"
+    StagedSwap.swapPartitions(fsFor(labelPath, spark), labelPath, entries,
+        logSidecar(labelPath)) { tmp =>
+      val keep = spark.read.option("basePath", labelPath).parquet(lDirs: _*)
+        .select(col("node"), col("cluster"))
+        .join(comp, Seq("node"), "left_anti")
+      bucketed(keep.unionByName(newLabels), buckets)
+        .mode("overwrite").parquet(tmp)
+      // purged merge log: drop every record resolving into the affected
+      // clusters (driver-sized — the mergeMap collect class); writing
+      // the path-compressed form is semantically identical to the raw
+      // chains it replaces. Nothing staged = the log line is "emptied".
+      val keptLog = m.toSeq.filterNot { case (_, fin) => cSet.contains(fin) }
+      if (keptLog.nonEmpty) {
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("old_cluster",
+            newLabels.schema("cluster").dataType),
+          org.apache.spark.sql.types.StructField("new_cluster",
+            newLabels.schema("cluster").dataType)))
+        val rows = keptLog.map { case (o, n) => Row(o, n) }
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+          .coalesce(1).write.mode("overwrite")
+          .parquet(new HPath(tmp, StagedLogDir).toString)
       }
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(new HPath(tmp, StagedLogDir).toString)
     }
-    // manifest AFTER the staged data: presence = stage complete
-    val bucketLines = lDirs.map { d =>
-      val rel = d.substring(d.lastIndexOf('/') + 1)
-      val kept = fs.exists(new HPath(tmp, rel))
-      s"$rel,${if (kept) "kept" else "emptied"}"
-    }
-    val manifest = (bucketLines :+
-      s"log,${if (logKept) "kept" else "emptied"}").mkString("\n")
-    writeString(fs, new HPath(tmp, AffectedFile), manifest)
   }
 
-  /** Swap a complete [[deleteNodes]] stage into the live layout,
-    * bucket by bucket then the merge log, driven by the manifest —
-    * idempotent exactly as [[AnnIndex]]'s delete swap, so [[recover]]
-    * re-runs it verbatim after a crash at any point. */
-  private def applyLabelDeleteSwap(fs: FileSystem,
-      labelPath: String): Unit = {
-    val tmp = labelPath + "_deleting"
-    readString(fs, new HPath(tmp, AffectedFile)).linesIterator
-      .filter(_.nonEmpty).foreach { line =>
-        val i = line.lastIndexOf(',')
-        val (d, status) = (line.substring(0, i), line.substring(i + 1))
-        if (d == "log") {
-          val staged = new HPath(tmp, StagedLogDir)
-          val live = new HPath(mergesPath(labelPath))
-          if (status == "kept") {
-            if (fs.exists(staged)) {
-              fs.delete(live, true)
-              fs.rename(staged, live)
-            } // staged gone = already swapped
-          } else fs.delete(live, true)
-        } else {
-          val live = new HPath(labelPath, d)
-          val staged = new HPath(tmp, d)
-          if (status == "kept") {
-            if (fs.exists(staged)) {
-              fs.delete(live, true)
-              fs.rename(staged, live)
-            }
-          } else fs.delete(live, true)
-        }
-      }
-  }
-
-  /** Resolve the leftover state of an interrupted [[compact]] or
-    * [[deleteNodes]] — the [[AnnIndex.recover]] cases: live missing +
-    * `_old` present rolls FORWARD iff the staged `_compacting` dir is
-    * complete (has its meta file), else back; a `_deleting` stage WITH
-    * its manifest redoes the (idempotent) label/log swap, without it
-    * the stage is discarded (the delete "didn't happen" — re-run it);
-    * stray `_old`/`_compacting` dirs are dropped. Runs at the head of
-    * every entry point; idempotent. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val fs = fsFor(path, spark)
-    val live = new HPath(path)
-    val old = new HPath(path + "_old")
-    val compacting = new HPath(path + "_compacting")
-    val deleting = new HPath(path + "_deleting")
-    if (!fs.exists(live) && fs.exists(old)) {
-      if (fs.exists(new HPath(compacting.toString, MetaFile))) {
-        fs.rename(compacting, live)
-        fs.delete(old, true)
-      } else fs.rename(old, live)
-    }
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(compacting)) fs.delete(compacting, true)
-    if (fs.exists(deleting)) {
-      if (fs.exists(new HPath(deleting, AffectedFile)))
-        applyLabelDeleteSwap(fs, path)
-      fs.delete(deleting, true)
-    }
-  }
+  /** Resolve the leftover state of an interrupted [[compact]],
+    * [[compactEdges]] or [[deleteNodes]] — [[StagedSwap.recover]],
+    * run at the head of every writer entry point. */
+  def recover(spark: SparkSession, path: String): Unit =
+    StagedSwap.recover(fsFor(path, spark), path, MetaFile,
+      logSidecar(path))
 }

@@ -238,8 +238,8 @@ object DedupIndex {
     * index by TABLE name only (as [[probe]] does). Crash honesty: the
     * catalog is session-scoped and the index is rebuildable from the
     * corpus, so a crash mid-swap costs a rebuild, never data — the
-    * full swap protocol [[AnnIndex.recover]] implements is not needed
-    * here and deliberately not duplicated. */
+    * [[StagedSwap]] protocol the path-based stores share is not
+    * needed here and deliberately not duplicated. */
   def compact(spark: SparkSession, table: String,
       buckets: Int = 32): Unit = {
     checkParams(spark, table, "buckets" -> buckets)
