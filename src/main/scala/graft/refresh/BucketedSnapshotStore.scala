@@ -47,6 +47,19 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * manifest — one cycle of reader grace, so a reader holding a lazy
   * DataFrame over the prior snapshot survives one refresh. A plain
   * legacy `_CURRENT` file reads as generation 0.
+  *
+  * Each data dir is listed once per dir lifetime, not once per read:
+  * building a parquet scan lists its dir, and a version dir's
+  * `bucket=*` subdirs outnumber Spark's parallel-discovery threshold,
+  * so every fresh scan would submit a listing job. The scan of each
+  * `v*`/`d*` dir is memoized by name, like a catalog entry, and is
+  * dropped when the dir leaves the manifest. That is safe because a
+  * dir name (monotonic number + random suffix) is never reused; a dir
+  * is written completely before any manifest references it and is
+  * never rewritten; GC deletes only leaves and dirs that neither the
+  * current nor the previous manifest references; and every read of a
+  * version goes through the manifest's `bucket isin (...)` partition
+  * filter, so a GC'd leaf is pruned before any file opens.
   */
 class BucketedSnapshotStore(
     spark: SparkSession, path: String, numBuckets: Int = 64,
@@ -81,7 +94,9 @@ class BucketedSnapshotStore(
   // ------------------------------------------------------------ manifest
 
   /** buckets: live bucket → version dir; deltas: ordered log dirs. */
-  private case class Manifest(buckets: Map[Long, String], deltas: Seq[String])
+  private case class Manifest(buckets: Map[Long, String], deltas: Seq[String]) {
+    def dirs: Set[String] = buckets.values.toSet ++ deltas
+  }
 
   /** Raced a concurrent committer at the same generation — re-read and
     * recompute against the fresh manifest. */
@@ -136,11 +151,22 @@ class BucketedSnapshotStore(
       lines.filter(_.startsWith("D ")).map(_.drop(2)))
   }
 
-  /** Current (generation, manifest); throws when nothing is committed. */
-  private def manifestWithGen: (Long, Manifest) =
+  private def currentManifest: Option[(Long, Manifest)] =
     currentGenAndBody().map { case (g, s) => (g, parseManifest(s)) }
-      .getOrElse(
-        throw new IllegalStateException(s"no committed snapshot at $path"))
+
+  /** Current (generation, manifest), or generation 0 and no data when
+    * nothing is committed. */
+  private def manifestOrEmpty: (Long, Manifest) =
+    currentManifest.getOrElse((0L, Manifest(Map.empty, Nil)))
+
+  /** Current (generation, manifest) for a read or a merge; throws when
+    * nothing is committed. */
+  private def manifestWithGen: (Long, Manifest) = {
+    val gm = currentManifest.getOrElse(
+      throw new IllegalStateException(s"no committed snapshot at $path"))
+    retainFor(gm._2)
+    gm
+  }
 
   private def manifest: Manifest = manifestWithGen._2
 
@@ -194,6 +220,7 @@ class BucketedSnapshotStore(
     manifestFiles().filter(_._1 < expectedGen).foreach { case (_, p) =>
       fs.delete(p, false)
     }
+    retainFor(m)
     gc(m, prev)
   }
 
@@ -234,8 +261,11 @@ class BucketedSnapshotStore(
             fs.delete(leaf.getPath, true)
         }
       if (Option(fs.globStatus(new Path(vDir.getPath, "bucket=*")))
-            .forall(_.isEmpty) && vDir.getModificationTime < cutoff)
+            .forall(_.isEmpty) && vDir.getModificationTime < cutoff) {
         fs.delete(vDir.getPath, true)
+        // a stage that was never committed is forgotten with its files
+        stagedWith.remove(v)
+      }
     }
     Option(fs.globStatus(new Path(root, "d*"))).toSeq.flatten
       .filter(st => !liveDeltas.contains(st.getPath.getName) &&
@@ -273,6 +303,36 @@ class BucketedSnapshotStore(
   private val stagedWith =
     scala.collection.concurrent.TrieMap.empty[String, Int]
 
+  /** Schema-fixed base scan of each data dir, built (and so listed)
+    * once per dir lifetime — see the class doc for why a memoized
+    * listing never serves stale or deleted files. */
+  private val scans =
+    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+
+  private def scan(dir: String): DataFrame =
+    scans.getOrElseUpdate(dir, spark.read
+      .schema(if (dir.startsWith("v")) "id STRING, doc STRING, h BIGINT, bucket BIGINT"
+        else "op STRING, id STRING, doc STRING, h BIGINT")
+      .parquet(new Path(root, dir).toString))
+
+  /** Once `m` is the manifest, a stage it commits needs no layout guard,
+    * and scans of dirs it no longer references are dropped — except a
+    * pending stage's (read by [[readVersion]] before its commit). Runs
+    * on every commit and every manifest read, so a read-only instance
+    * stays bounded too. */
+  private def retainFor(m: Manifest): Unit = {
+    val live = m.dirs
+    live.foreach(stagedWith.remove)
+    scans.keys.filterNot(d => live(d) || stagedWith.contains(d))
+      .foreach(scans.remove)
+  }
+
+  /** Dirs whose scans are memoized. */
+  private[refresh] def memoizedDirs: Set[String] = scans.keySet.toSet
+
+  /** Staged versions not yet committed. */
+  private[refresh] def pendingStages: Set[String] = stagedWith.keySet.toSet
+
   /** Write `df` (must be `(id, doc)`) as the next full version; returns
     * the version id. Does NOT move the pointer — call [[commit]]. */
   def stage(df: DataFrame): String = {
@@ -300,34 +360,35 @@ class BucketedSnapshotStore(
           "with a different bucket count) — re-stage and retry")
     }
 
-  /** Publish an EMPTY committed snapshot without staging any data —
-    * what `recreate` needs: the manifest a `commit(stage(emptyDF))`
-    * would publish (no buckets, no deltas), minus the Spark write job
-    * an empty stage still costs. Everything downstream is identical:
-    * reads resolve to the empty frame, the first merge bulk-loads. */
-  private[graft] def commitEmpty(): Unit = withCasRetry("commitEmpty") {
-    val (gen, prev) = currentGenAndBody()
-      .map { case (g, s) => (g, parseManifest(s)) }
-      .getOrElse((0L, Manifest(Map.empty, Nil)))
-    commitManifest(Manifest(Map.empty, Nil), gen, prev)
+  /** Delete the whole store and publish an EMPTY committed snapshot
+    * without staging any data (A16 recreate_index: delete + recreate).
+    * The in-memory state tied to the deleted files goes with them: the
+    * persisted bucket count, so the configured count is stamped afresh,
+    * the memoized scans and the pending stages. The manifest is the one
+    * a `commit(stage(emptyDF))` would publish (no buckets, no deltas),
+    * minus the Spark write job an empty stage still costs: reads
+    * resolve to the empty frame, the first merge bulk-loads. */
+  private[graft] def recreate(): Unit = {
+    if (fs.exists(root)) fs.delete(root, true)
+    persistedBuckets = None
+    scans.clear()
+    stagedWith.clear()
+    withCasRetry("recreate") {
+      val (gen, prev) = manifestOrEmpty
+      commitManifest(Manifest(Map.empty, Nil), gen, prev)
+    }
   }
 
   /** Full-snapshot commit: every bucket present in `v` becomes current
     * and the delta log is cleared (a backfill / full refresh wrote the
     * complete view into `v`). */
   def commit(v: String): Unit = withCasRetry("commit") {
-    val (gen, prev) = currentGenAndBody()
-      .map { case (g, s) => (g, parseManifest(s)) }
-      .getOrElse((0L, Manifest(Map.empty, Nil)))
+    val (gen, prev) = manifestOrEmpty
     requireStageLayout(v)
     commitManifest(Manifest(bucketsIn(v).map(_ -> v).toMap, Nil), gen, prev)
   }
 
-  def readVersion(v: String): DataFrame =
-    spark.read
-      .schema("id STRING, doc STRING, h BIGINT, bucket BIGINT")
-      .parquet(new Path(root, v).toString)
-      .select("id", "doc")
+  def readVersion(v: String): DataFrame = scan(v).select("id", "doc")
 
   /** Internal frames carry `(id, doc, h)`; the public readers project. */
   private def emptyFull: DataFrame =
@@ -339,12 +400,11 @@ class BucketedSnapshotStore(
   private def readLeaves(m: Map[Long, String]): DataFrame =
     if (m.isEmpty) emptyFull
     else {
-      // one partitioned read per VERSION dir (not per leaf): driver-side
-      // listing cost ∝ #versions (small, GC-bounded), and the isin on
-      // the partition column prunes to exactly the manifest's buckets
+      // one partitioned scan per VERSION dir (not per leaf), listed once
+      // per dir; the isin on the partition column prunes to exactly the
+      // manifest's buckets
       m.groupBy(_._2).toSeq.sortBy(_._1).map { case (v, entries) =>
-        spark.read.schema("id STRING, doc STRING, h BIGINT, bucket BIGINT")
-          .parquet(new Path(root, v).toString)
+        scan(v)
           .filter(col("bucket").isin(entries.keys.toSeq: _*))
           .select("id", "doc", "h")
       }.reduce(_ unionByName _)
@@ -361,15 +421,10 @@ class BucketedSnapshotStore(
     * row_number window forced a sort exchange (guide §2.3/§2.4). */
   private def latestDelta(deltas: Seq[String]): Option[DataFrame] =
     if (deltas.isEmpty) None
-    else if (deltas.size == 1) Some {
-      spark.read.schema("op STRING, id STRING, doc STRING, h BIGINT")
-        .parquet(new Path(root, deltas.head).toString)
-    }
+    else if (deltas.size == 1) Some(scan(deltas.head))
     else Some {
       deltas.zipWithIndex.map { case (d, i) =>
-        spark.read.schema("op STRING, id STRING, doc STRING, h BIGINT")
-          .parquet(new Path(root, d).toString)
-          .withColumn("_seq", lit(i))
+        scan(d).withColumn("_seq", lit(i))
       }.reduce(_ unionByName _)
         .groupBy(col("id"))
         .agg(max_by(struct(col("op"), col("doc"), col("h")),

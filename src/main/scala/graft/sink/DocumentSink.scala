@@ -2,7 +2,6 @@ package graft.sink
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -110,13 +109,10 @@ class BucketedParquetIndex(spark: SparkSession, val index: String,
 
   /** Initialize empty (A16 recreate_index: delete + recreate) —
     * manifest-only: publishing the empty snapshot needs no Spark job
-    * (an empty stage+commit used to pay one write job for zero rows). */
-  def recreate(): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    store.commitEmpty()
-  }
+    * (an empty stage+commit used to pay one write job for zero rows).
+    * The store deletes its own root, so no state it holds in memory
+    * outlives the files. */
+  def recreate(): Unit = store.recreate()
 
   def read(): DataFrame = store.read()
 
